@@ -9,6 +9,7 @@ reused by later runs with the same key.
 
 from __future__ import annotations
 
+import argparse
 import datetime
 import json
 import multiprocessing
@@ -54,10 +55,18 @@ _WORDS = np.array(
 _EDGE_RE = re.compile(r".*((/$)|(/.*/)).*")  # graph_build's ingest regex
 
 
+def cache_dir(cache_root: str, workload: str, seed: int, size: str) -> str:
+    return os.path.join(cache_root, f"{workload}-s{seed}-{size}")
+
+
+def complete(d: str) -> bool:
+    return os.path.exists(os.path.join(d, "DONE"))
+
+
 def ensure(cache_root: str, workload: str, seed: int, size: str) -> str:
     """Return the cache dir for the key, generating it first if absent."""
-    d = os.path.join(cache_root, f"{workload}-s{seed}-{size}")
-    if os.path.exists(os.path.join(d, "DONE")):
+    d = cache_dir(cache_root, workload, seed, size)
+    if complete(d):
         return d
     shutil.rmtree(d, ignore_errors=True)
     tmp = d + ".partial"
@@ -286,3 +295,18 @@ def _gen_hosts(d: str, rng: np.random.Generator, p: dict, seed: int) -> dict:
         "edges": g.num_edges, "vertices": g.num_vertices, "raw_edges": len(src),
         "triangles": tri, "components": len(set(cc.values())),
     }
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description="Generate one workload's cached inputs.")
+    ap.add_argument("--cache-root", required=True)
+    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--seed", type=int, required=True)
+    ap.add_argument("--size", required=True, choices=tuple(SIZES))
+    a = ap.parse_args(argv)
+    ensure(a.cache_root, a.workload, a.seed, a.size)
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

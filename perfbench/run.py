@@ -13,6 +13,7 @@ See perfbench/README.md for the workloads and metrics.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
@@ -25,7 +26,9 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_TIMEOUT_S = 170      # whole run, workers included
 RECORD_KEEP = 32
+TWIN_ROOM = 1.15         # an untraced twin runs only if 1.15x the traced worker's wall is left
 PAGE = os.sysconf("SC_PAGE_SIZE")
+PR_SET_CHILD_SUBREAPER = 36
 
 LAYERS = ("extract", "graph_build", "pagerank", "pagerank_csr", "pagerank_durable",
           "components", "labelprop", "triangles")
@@ -115,55 +118,74 @@ def _comm(pid: int) -> str:
         return "?"
 
 
-def run_worker(args: list, env: dict, timeout_s: float):
-    """Run the worker, sampling the summed RSS of its process tree (JVM and
-    Python workers included). Returns (exit code, peak RSS bytes, the peak's
-    MB by process name). Every process of the tree is gone when this returns."""
-    # the worker's own output goes to stderr: stdout carries only the result
+def become_subreaper() -> None:
+    """Make this process the child subreaper of everything it starts: an
+    orphan anywhere below it (the JVM after its driver Python exits, the
+    PySpark daemon, multiprocessing's resource tracker) is re-parented here,
+    not to init, so reap_all can stop and wait for every one of them."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def _descendants() -> set:
+    me = os.getpid()
+    return _tree(me, _children()) - {me}
+
+
+def reap_all(timeout_s: float = 20.0) -> None:
+    """Kill every process still below this one and wait for each, zombies
+    included, until this process has no child left."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        for p in _descendants():
+            try:
+                os.kill(p, signal.SIGKILL)
+            except OSError:
+                pass
+        while True:
+            try:
+                pid, _ = os.waitpid(-1, os.WNOHANG)
+            except ChildProcessError:
+                return
+            if pid == 0:
+                break
+        if time.monotonic() > deadline:
+            print(f"perfbench: processes outlived the run: {sorted(_descendants())}",
+                  file=sys.stderr)
+            return
+        time.sleep(0.05)
+
+
+def run_child(args: list, env: dict, timeout_s: float, sample_rss: bool = False):
+    """Run a child process to its end, optionally sampling the summed RSS of
+    every process below this one (JVM and Python workers included). Returns
+    (exit code, peak RSS bytes, the peak's MB by process name). Every process
+    the child started is gone when this returns."""
+    # the child's own output goes to stderr: stdout carries only the result
     proc = subprocess.Popen(args, env=env, cwd=ROOT, start_new_session=True, stdout=sys.stderr)
-    seen: set = set()
     peak, at_peak = 0, {}
     deadline = time.monotonic() + timeout_s
     try:
         while proc.poll() is None:
             if time.monotonic() > deadline:
-                raise TimeoutError(f"worker exceeded {timeout_s:.0f} s")
-            parents = _children()
-            tree = _tree(proc.pid, parents)
-            seen |= tree
-            rss = {p: _rss_bytes(p) for p in tree
-                   if p == proc.pid or not _spawning(p, parents[p])}
-            if sum(rss.values()) > peak:
-                peak = sum(rss.values())
-                at_peak = {}
-                for p, b in rss.items():
-                    at_peak[_comm(p)] = at_peak.get(_comm(p), 0) + b / 2**20
+                raise TimeoutError(f"{args[2]} exceeded {timeout_s:.0f} s")
+            if sample_rss:
+                parents = _children()
+                rss = {p: _rss_bytes(p) for p in _tree(os.getpid(), parents) - {os.getpid()}
+                       if p == proc.pid or not _spawning(p, parents[p])}
+                if sum(rss.values()) > peak:
+                    peak = sum(rss.values())
+                    at_peak = {}
+                    for p, b in rss.items():
+                        at_peak[_comm(p)] = at_peak.get(_comm(p), 0) + b / 2**20
             time.sleep(0.1)
     finally:
-        _reap(proc, seen)
+        if proc.poll() is None:
+            proc.kill()
+        proc.wait()
+        reap_all()
     return proc.returncode, peak, at_peak
-
-
-def _reap(proc, seen: set) -> None:
-    """Stop the worker and anything it started that outlived it (the PySpark
-    daemon runs in its own process group), then wait until all have ended."""
-    if proc.poll() is None:
-        proc.kill()
-    proc.wait()
-    seen.discard(proc.pid)
-    alive = {p for p in seen if os.path.exists(f"/proc/{p}")}
-    # a leftover must still descend from a process we started
-    parents = _children()
-    alive = {p for p in alive if p in parents and (parents[p] in seen or parents[p] == 1)}
-    for p in alive:
-        try:
-            os.kill(p, signal.SIGKILL)
-        except OSError:
-            pass
-    deadline = time.monotonic() + 20
-    while alive and time.monotonic() < deadline:
-        alive = {p for p in alive if os.path.exists(f"/proc/{p}")}
-        time.sleep(0.05)
 
 
 # -- drift canary and box record ------------------------------------------------
@@ -263,14 +285,41 @@ def _write_record(path: str, totals: list) -> None:
     os.replace(path + ".tmp", path)
 
 
+def child_env() -> dict:
+    env = dict(os.environ)
+    env["PYTHONPATH"] = ROOT + os.pathsep + env.get("PYTHONPATH", "")
+    return env
+
+
+def generate(a, deadline: float) -> str | None:
+    """Generate the workload's inputs and oracle outputs (a cache miss) in a
+    child process, so its process pool ends with it; the cache dir, or None."""
+    from perfbench import inputs
+
+    cache = inputs.cache_dir(os.path.join(ROOT, ".bench_cache"), a.workload, a.seed, a.size)
+    if inputs.complete(cache):
+        return cache
+    cmd = [sys.executable, "-m", "perfbench.inputs", "--cache-root",
+           os.path.join(ROOT, ".bench_cache"), "--workload", a.workload,
+           "--seed", str(a.seed), "--size", a.size]
+    try:
+        code, _, _ = run_child(cmd, child_env(), deadline - time.monotonic())
+    except TimeoutError as e:
+        print(f"perfbench: {e}", file=sys.stderr)
+        return None
+    if code != 0 or not inputs.complete(cache):
+        print(f"perfbench: input generation exited with code {code}", file=sys.stderr)
+        return None
+    return cache
+
+
 def run_once(a, cache: str, traced: int, tmp: str, deadline: float) -> dict | None:
     """One worker process; its result dict (with peak_rss_mb), or None."""
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     out = os.path.join(tmp, "result.json")
-    env = dict(os.environ)
+    env = child_env()
     env.update({
-        "PYTHONPATH": ROOT + os.pathsep + env.get("PYTHONPATH", ""),
         "TMPDIR": tmp,
         "SPARK_LOCAL_DIRS": os.path.join(tmp, "spark-local"),
         "PAGERANK_CSR_CACHE_DIR": os.path.join(tmp, "csr-node-cache"),
@@ -284,8 +333,9 @@ def run_once(a, cache: str, traced: int, tmp: str, deadline: float) -> dict | No
     cmd = [sys.executable, "-m", "perfbench.worker", "--workload", a.workload,
            "--cache-dir", cache, "--tmp", tmp, "--seconds", str(a.seconds),
            "--trace", str(traced), "--out", out, "--t0", repr(time.time())]
+    t0 = time.monotonic()
     try:
-        code, peak, at_peak = run_worker(cmd, env, deadline - time.monotonic())
+        code, peak, at_peak = run_child(cmd, env, deadline - time.monotonic(), sample_rss=True)
     except TimeoutError as e:
         print(f"perfbench: {e}", file=sys.stderr)
         return None
@@ -296,6 +346,7 @@ def run_once(a, cache: str, traced: int, tmp: str, deadline: float) -> dict | No
         res = json.load(f)
     res["peak_rss_mb"] = peak / 2**20
     res["peak_rss_by_process_mb"] = at_peak
+    res["worker_s"] = time.monotonic() - t0
     return res
 
 
@@ -319,30 +370,40 @@ def main(argv=None) -> int:
         print(f"perfbench: unknown workload {a.workload!r} or size {a.size!r}", file=sys.stderr)
         return 2
 
+    become_subreaper()
+    # a terminated run still stops and waits for everything it started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     t_start = time.monotonic()
     canary_first = canary_s()
     golden_problems = oracle.validate_on_golden()
 
     t0 = time.perf_counter()
-    cache = inputs.ensure(os.path.join(ROOT, ".bench_cache"), a.workload, a.seed, a.size)
+    cache = generate(a, deadline=t_start + RUN_TIMEOUT_S)
+    if cache is None:
+        return 1
     gen_s = time.perf_counter() - t0
     with open(os.path.join(cache, "expected.json")) as f:
         expected = json.load(f)
 
     # a traced run compares its total_s with the untraced runs recorded in
-    # this checkout; with none recorded yet it runs an untraced twin first
+    # this checkout; with none recorded yet it runs an untraced twin after
+    # itself, if the run's time limit leaves room for one
     record = os.path.join(ROOT, ".bench_cache", f"untraced-{a.workload}-{a.size}.json")
     untraced_totals = _read_record(record)
-    runs = [1] if a.trace and untraced_totals else ([0, 1] if a.trace else [0])
     results = {}
     tmp_root = os.path.join(ROOT, ".bench_tmp")
+    deadline = t_start + RUN_TIMEOUT_S
     try:
-        for traced in runs:
-            res = run_once(a, cache, traced, os.path.join(tmp_root, f"{a.workload}-{traced}"),
-                           deadline=t_start + RUN_TIMEOUT_S)
-            if res is None:
-                return 1
-            results[traced] = res
+        res = run_once(a, cache, a.trace, os.path.join(tmp_root, f"{a.workload}-{a.trace}"),
+                       deadline)
+        if res is None:
+            return 1
+        results[a.trace] = res
+        if (a.trace and not untraced_totals
+                and deadline - time.monotonic() > TWIN_ROOM * res["worker_s"]):
+            twin = run_once(a, cache, 0, os.path.join(tmp_root, f"{a.workload}-0"), deadline)
+            if twin is not None:
+                results[0] = twin
     finally:
         shutil.rmtree(tmp_root, ignore_errors=True)
     canary_last = canary_s()
@@ -350,7 +411,7 @@ def main(argv=None) -> int:
         untraced_totals.append(summarize(results[0], expected)["total_s"])
         _write_record(record, untraced_totals)
 
-    res = results[runs[-1]]
+    res = results[a.trace]
     summary = summarize(res, expected)
     correct = not golden_problems and summary["ops_failed"] == 0 and not res["error"]
     meta = {
@@ -362,6 +423,7 @@ def main(argv=None) -> int:
         "session_s": res["session_s"], "warm_up_s": res["warm_up_s"],
         "setup_reps_s": res["setup_reps_s"], "build_s": res["build_s"],
         "peak_rss_by_process_mb": res["peak_rss_by_process_mb"],
+        "untraced_records": len(untraced_totals),
         **summary,
         "failed_ops": [f"{s['group']}: {s['error']}" for s in res["spans"] if s["error"]],
     }
@@ -369,7 +431,9 @@ def main(argv=None) -> int:
 
     if a.trace:
         vals = layer_metrics(res)
-        vals["trace.overhead_s"] = summary["total_s"] - statistics.median(untraced_totals)
+        # 0 when no untraced total is recorded and there was no room for a twin
+        vals["trace.overhead_s"] = (summary["total_s"] - statistics.median(untraced_totals)
+                                    if untraced_totals else 0.0)
         metrics = {n: {"value": vals[n], "unit": unit_of(n)} for n in per_layer_names()}
     else:
         metrics = {

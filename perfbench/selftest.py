@@ -6,7 +6,8 @@ Runs every workload at the "tiny" size, untraced and traced, and asserts
 that each end-to-end and per-layer metric named in BENCHMARK.json is
 present with its unit, that every op passed its output check, and that the
 benchmark refuses to run (non-zero exit, no result line) from a directory
-holding only BENCHMARK.json and perfbench/.
+holding only BENCHMARK.json and perfbench/. After every run it asserts
+that no Java or Python process the run started is still there.
 """
 
 from __future__ import annotations
@@ -20,11 +21,27 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _pids() -> set:
+    return {int(n) for n in os.listdir("/proc") if n.isdigit()}
+
+
 def run(args: list, cwd: str = ROOT) -> tuple[int, list]:
+    """Run the benchmark; assert that no process it started outlives it."""
+    before = _pids()
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", *args], cwd=cwd,
         capture_output=True, text=True, timeout=300,
     )
+    left = []
+    for pid in _pids() - before:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
+        except OSError:
+            continue   # ended meanwhile
+        if "java" in cmd or "python" in cmd:
+            left.append((pid, cmd[:120]))
+    assert not left, f"processes outlived the run: {left}"
     return p.returncode, p.stdout.strip().splitlines()
 
 
