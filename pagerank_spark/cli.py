@@ -11,7 +11,7 @@ Run (spark-submit takes a script file, not -m; the launcher just calls
     spark-submit --py-files pagerank_spark.zip spark_submit_launcher.py \\
         --data pages.parquet --search_query corona
 
-or locally: python -m pagerank_spark.cli --data /root/reference/small.csv.gz
+or locally: python -m pagerank_spark.cli --data small.csv.gz
 
 ``--data`` accepts a gzipped edge CSV (header source,target — the reference's
 format), a parquet edge table (src,dst), or a parquet pages table

@@ -17,12 +17,17 @@ Scale design (SURVEY.md §4):
     edges-join-ranks is co-partitioned; the only unavoidable shuffle is the
     groupBy(dst) combine (map-side partial aggregation applies).
   * all per-iteration scalars (dangling mass, norm, residual) come from ONE
-    fused aggregate job over the checkpointed new vector:
+    fused aggregate action over the checkpointed new vector:
         norm      = sqrt(sum(x_un^2))
         residual  = sqrt(max(0, 2 - 2*sum(x_un*x_prev)/norm))
                     (both x_un/norm and x_prev are unit vectors)
         dangling  = sum(x_un * is_dangling)/norm      (for the NEXT iteration)
-    so each iteration costs exactly 2 jobs: materialize + fused stats.
+    That action also materializes the vector's lazy checkpoint. AQE runs
+    each query stage under it as its own Spark job: measured 5 jobs per
+    iteration on both backends (pinned in tests/test_plan_audits.py).
+  * one loop, power_iterate, serves both backends; a backend (SpMV) only
+    supplies P'x — a join + aggregate here, block-local NumPy kernels in
+    operators/pagerank_csr.py — plus its vertex key and partition layout.
   * localCheckpoint each iteration truncates lineage (else the plan doubles
     per iteration); persistent checkpointing to a directory (resumable, with
     per-iteration manifests) lives in plans/checkpoint.py.
@@ -33,6 +38,7 @@ from __future__ import annotations
 
 import math
 import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -82,6 +88,23 @@ def _init_state(graph, v_df: DataFrame | None, x0_df: DataFrame | None = None) -
     )
 
 
+class SpMV(NamedTuple):
+    """What a PageRank backend plugs into ``power_iterate``.
+
+    ``key``: vertex key column of the rank state (``url`` itself or an id).
+    ``contribs``: rank state x -> (key, _c) with _c = (P'x) at that vertex.
+    ``layout``: keys and partitions a (url, v, dangling, rank) frame the loop
+    did not produce — initial state, resumed or re-read checkpoint.
+    ``relayout``: True when the fold join does not keep ``layout``'s
+    partitioning, so every new vector is laid out again.
+    """
+
+    key: str
+    contribs: Callable[[DataFrame], DataFrame]
+    layout: Callable[[DataFrame], DataFrame]
+    relayout: bool = False
+
+
 def pagerank(
     graph,
     alpha: float = 0.85,
@@ -90,119 +113,120 @@ def pagerank(
     epsilon: float = 1e-6,
     checkpointer=None,
     metrics: list | None = None,
-    broadcast_ranks: bool | None = None,
     x0_df: DataFrame | None = None,
 ) -> DataFrame:
     """Return (url, rank) with rank the L2-normalized PageRank vector.
 
     ``checkpointer``: optional plans.checkpoint.IterationCheckpointer for
     durable resume; ``metrics``: optional list collecting per-iteration dicts.
-
-    ``broadcast_ranks``: per-iteration join strategy. The rank vector is
-    vertex-sized — orders of magnitude smaller than the edge table — so when
-    it fits in an executor we can broadcast it and the big side never moves:
-    edges stay partitioned in place and the only shuffle per iteration is
-    the groupBy(dst) combine. BUT the broadcast build is driver-serial work
-    repeated every iteration, so it only wins while the edge side is small:
-    measured at local[*] the broadcast mode wins at ~1M edges and LOSES from
-    ~10M edges up to the co-partitioned shuffle join against the persisted
-    hash(src)+sorted layout (whose per-iteration cost is one vertex-table
-    sort + the combine — the cached edge side is joined exchange-free and
-    sort-free thanks to LinkGraph's sortWithinPartitions). Auto policy:
-    broadcast only when vertices < 10M AND edges < 5M; at cluster scale both
-    flags naturally select the shuffle path. Left to the planner, AQE can
-    instead choose to broadcast the EDGE table (it often fits the 64 MB
-    estimate at test scale), re-serializing the big side every iteration —
-    measured 4x slower at 1M edges; that is why the loop pins the strategy.
     """
-    num_parts = graph.num_partitions
-    edges = graph.edges
-    if broadcast_ranks is None:
-        broadcast_ranks = (
-            graph.num_vertices() < 10_000_000 and graph.num_edges() < 5_000_000
-        )
-
-    # The loop runs under whatever session conf the caller has (AQE stays ON
-    # by default): the plan is pinned per-query instead of via session conf —
-    # F.broadcast() forces the rank-side broadcast, repartition(P, 'url')
-    # with an explicit partition count is preserved by AQE's coalescer, and
-    # the cached edge layout fixes the big side. A previous version toggled
-    # spark.sql.adaptive.enabled session-globally around the loop; that
-    # silently changed concurrent queries on the same session (exactly what
-    # the streaming refresh cadence produces) and two concurrent loops'
-    # finally-restores raced — never do that.
-    return _iterate(
-        graph, alpha, v_df, max_iterations, epsilon, checkpointer,
-        metrics, broadcast_ranks, num_parts, edges, x0_df,
+    return power_iterate(
+        graph, _join_agg(graph), alpha, v_df, max_iterations, epsilon,
+        checkpointer, metrics, x0_df,
     )
 
 
-def _iterate(
-    graph, alpha, v_df, max_iterations, epsilon, checkpointer,
-    metrics, broadcast_ranks, num_parts, edges, x0_df=None,
+def _join_agg(graph) -> SpMV:
+    """P'x as edges JOIN x, then groupBy(dst) sum.
+
+    Join strategy: the rank vector is vertex-sized — orders of magnitude
+    smaller than the edge table — so when it fits in an executor it is
+    broadcast and the big side never moves: edges stay partitioned in place
+    and the only shuffle per iteration is the groupBy(dst) combine. BUT the
+    broadcast build is driver-serial work repeated every iteration, so it
+    only wins while the edge side is small: measured at local[*] the
+    broadcast mode wins at ~1M edges and LOSES from ~10M edges up to the
+    co-partitioned shuffle join against the persisted hash(src)+sorted
+    layout (whose per-iteration cost is one vertex-table sort + the combine —
+    the cached edge side is joined exchange-free and sort-free thanks to
+    LinkGraph's sortWithinPartitions). Policy: broadcast only when vertices
+    < 10M AND edges < 5M; at cluster scale both tests select the shuffle
+    path. Left to the planner, AQE can instead choose to broadcast the EDGE
+    table (it often fits the 64 MB estimate at test scale), re-serializing
+    the big side every iteration — measured 4x slower at 1M edges; that is
+    why the strategy is pinned.
+    """
+    num_parts = graph.num_partitions
+    broadcast = graph.num_vertices() < 10_000_000 and graph.num_edges() < 5_000_000
+
+    def contribs(x: DataFrame) -> DataFrame:
+        x_src = x.select(F.col("url").alias("src"), "rank")
+        if broadcast:
+            x_src = F.broadcast(x_src)
+        return (
+            graph.edges.join(x_src, "src")
+            .groupBy(F.col("dst").alias("url"))
+            .agg(F.sum(F.col("weight") * F.col("rank")).alias("_c"))
+        )
+
+    # the combine's exchange uses spark.sql.shuffle.partitions, not
+    # num_parts, so the fold join's output is laid out again
+    return SpMV("url", contribs, lambda df: df.repartition(num_parts, "url"), relayout=True)
+
+
+def power_iterate(
+    graph,
+    spmv: SpMV,
+    alpha: float = 0.85,
+    v_df: DataFrame | None = None,
+    max_iterations: int = 1000,
+    epsilon: float = 1e-6,
+    checkpointer=None,
+    metrics: list | None = None,
+    x0_df: DataFrame | None = None,
 ) -> DataFrame:
+    """The reference power method (pagerank.py:122-172) over ``spmv``;
+    returns (url, rank). Arguments as in ``pagerank``.
 
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.try_resume()
-        if resumed is not None:
-            start_iter, x, dangling_mass = resumed
-        else:
-            x = _init_state(graph, v_df, x0_df)
+    The loop runs under whatever session conf the caller has (AQE stays ON
+    by default): the plan is pinned per-query instead of via session conf —
+    the backends pin their SpMV exchanges and the fold join is hinted
+    'merge'. A previous version toggled spark.sql.adaptive.enabled
+    session-globally around the loop; that silently changed concurrent
+    queries on the same session (exactly what the streaming refresh cadence
+    produces) and two concurrent loops' finally-restores raced — never do
+    that.
+    """
+    resumed = checkpointer.try_resume() if checkpointer is not None else None
+    if resumed is not None:
+        start_iter, x, dangling_mass = resumed
+        x = spmv.layout(x)
     else:
-        x = _init_state(graph, v_df, x0_df)
-
-    if start_iter == 0:
+        start_iter = 0
         # ONE init job, same fusion as the loop body: the LAZY checkpoint
         # materializes during the dangling-mass aggregate (eager checkpoint
         # + agg was 2 jobs — at 9-iteration convergence runs the init jobs
         # are a measurable slice of the fixed non-wall cost)
-        x = x.repartition(num_parts, "url").localCheckpoint(eager=False)
+        x = spmv.layout(_init_state(graph, v_df, x0_df)).localCheckpoint(eager=False)
         # initial dangling mass: x0 . a
         dangling_mass = x.agg(F.sum(F.col("rank") * F.col("dangling"))).first()[0] or 0.0
 
-    prev_ck = x  # checkpointed DataFrame whose blocks back the current x
+    cols = list(dict.fromkeys(("url", spmv.key, "v", "dangling")))
+    prev_ck = x  # DataFrame whose blocks back the current x
     for it in range(start_iter, max_iterations):
         t0 = time.monotonic()
         q = alpha * dangling_mass + (1.0 - alpha)
 
-        x_src = x.select(F.col("url").alias("src"), "rank")
-        if broadcast_ranks:
-            x_src = F.broadcast(x_src)
-        contribs = (
-            edges.join(x_src, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("weight") * F.col("rank")).alias("_c"))
+        # The merge hint pins the fold to a shuffle join of two vertex-sized
+        # tables. Without it AQE sees the vertex-sized contribs stage and
+        # converts to a per-iteration broadcast join — measured 2.3x slower
+        # over the loop, and 5x slower at local[32]/10M edges: the broadcast
+        # build serializes on the driver and accumulated broadcasts GC-thrash.
+        new = x.join(spmv.contribs(x).hint("merge"), spmv.key, "left").select(
+            *cols,
+            (
+                F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0))
+                + F.lit(q) * F.col("v")
+            ).alias("_xun"),
+            F.col("rank").alias("_prev"),
         )
-        # NOTE: broadcasting contribs here (it is vertex-sized) looks like it
-        # should save the vertex-table shuffle, but measured 5x SLOWER at
-        # local[32]/10M edges — the per-iteration broadcast build serializes
-        # on the driver and accumulated broadcasts GC-thrash. The plain
-        # shuffle join of two vertex-sized tables is cheap and stable. The
-        # merge hint pins that choice per-plan (without it, AQE sees the
-        # vertex-sized contribs stage and converts to exactly the broadcast
-        # join ruled out above — measured 2.3x slower over the loop); this
-        # replaces the old session-global AQE toggle.
-        new = (
-            x.join(contribs.hint("merge"), x.url == contribs.dst, "left")
-            .select(
-                x.url,
-                x.v,
-                x.dangling,
-                (
-                    F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0))
-                    + F.lit(q) * x.v
-                ).alias("_xun"),
-                x.rank.alias("_prev"),
-            )
-            .repartition(num_parts, "url")
-        )
-        # ONE job per iteration: a LAZY localCheckpoint materializes during
-        # the fused stats aggregate below, so the iteration costs a single
-        # action (vs eager checkpoint + agg = 2 jobs). Lineage still
-        # truncates at the checkpoint. (A persist()-chain variant deadlocks
-        # under AQE when the cached plan embeds the per-iteration broadcast
-        # exchange — do not revisit.)
+        if spmv.relayout:
+            new = spmv.layout(new)
+        # ONE action per iteration: a LAZY localCheckpoint materializes during
+        # the fused stats aggregate below (vs eager checkpoint + agg = 2
+        # actions). Lineage still truncates at the checkpoint. (A
+        # persist()-chain variant deadlocks under AQE when the cached plan
+        # embeds the per-iteration broadcast exchange — do not revisit.)
         new = new.localCheckpoint(eager=False)
 
         s = new.agg(
@@ -214,9 +238,7 @@ def _iterate(
         residual = math.sqrt(max(0.0, 2.0 - 2.0 * s["sp"] / norm))
         dangling_mass = (s["sd"] or 0.0) / norm
 
-        x = new.select(
-            "url", "v", "dangling", (F.col("_xun") / F.lit(norm)).alias("rank")
-        )
+        x = new.select(*cols, (F.col("_xun") / F.lit(norm)).alias("rank"))
         if metrics is not None:
             metrics.append(
                 {
@@ -228,13 +250,13 @@ def _iterate(
                 }
             )
         if checkpointer is not None:
-            x = checkpointer.save(it, x, dangling_mass, residual)
+            state = x.select("url", "v", "dangling", "rank")
+            saved = checkpointer.save(it, state, dangling_mass, residual)
+            if saved is not state:
+                # continue from the durable copy (lineage + memory bounded)
+                x = spmv.layout(saved)
         # free the previous iteration's checkpoint blocks
-        if prev_ck is not None:
-            try:
-                prev_ck.unpersist()
-            except Exception:
-                pass
+        prev_ck.unpersist()
         prev_ck = new
         if residual < epsilon:
             break

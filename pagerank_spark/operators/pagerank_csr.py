@@ -45,13 +45,12 @@ Design — why this shape survives scale:
   * per iteration, applyInPandas over the rank blocks only: gather x[sid]
     via one searchsorted per block, contribs = weight * x[sid], segment-sum
     by dst code with np.bincount (true vectorized segment-sum), then one JVM
-    aggregation combines partial sums across blocks and an exchange-free
-    join (both sides hash-partitioned to B on the vertex id) folds them into
-    the next vector.
-  * one Spark job per iteration: the new vector is a LAZY localCheckpoint
-    that materializes during the fused stats aggregate (same trick as v1).
+    aggregation combines partial sums across blocks. The loop itself —
+    fold join, lazy localCheckpoint, fused stats action, checkpoint/resume —
+    is operators/pagerank.power_iterate, shared with v1; this module is its
+    SpMV backend (_csr_spmv).
   * the plan is pinned per-query, not via session conf: the contribs
-    aggregation rides an explicit repartition(B, 'did') (AQE preserves
+    aggregation rides an explicit repartition(B, 'vid') (AQE preserves
     user-specified partition counts) and the contribs fold is hinted
     'merge' so AQE cannot rewrite the exchange-free join into a
     per-iteration broadcast.
@@ -76,9 +75,7 @@ Cross-check test: must equal v1 (and the NumPy oracle) to 1e-6 per vertex.
 from __future__ import annotations
 
 import json
-import math
 import os
-import time
 import uuid
 
 import numpy as np
@@ -86,7 +83,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.pagerank import _init_state
+from pagerank_spark.operators.pagerank import SpMV, power_iterate
 
 # per-process mmap handles (cheap: a handle is a view, the data lives in the
 # node's page cache, shared by ALL Python workers on the node). Keyed by the
@@ -126,7 +123,7 @@ _BLOCK_META = "_meta.json"
 # skip a cache base when the block's arrays would eat more than this share
 # of its CURRENT free space (tmpfs is bounded: filling /dev/shm turns later
 # allocations anywhere on the node into hard failures)
-_SHM_BUDGET_FRACTION = float(os.environ.get("PAGERANK_CSR_SHM_FRACTION", "0.5"))
+_SHM_BUDGET_FRACTION = 0.5
 
 
 def _cache_bases() -> list:
@@ -317,11 +314,11 @@ def _load_block(scratch: str, block: int):
 def _make_spmv_kernel(scratch: str):
     def spmv(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
-            return pd.DataFrame({"did": pd.Series(dtype="int64"),
+            return pd.DataFrame({"vid": pd.Series(dtype="int64"),
                                  "c": pd.Series(dtype="float64")})
         blk = _load_block(scratch, int(pdf["block"].iloc[0]))
         if blk is None:
-            return pd.DataFrame({"did": pd.Series(dtype="int64"),
+            return pd.DataFrame({"vid": pd.Series(dtype="int64"),
                                  "c": pd.Series(dtype="float64")})
         sid_u, sid_codes, did_u, did_codes, w = blk
         vids = pdf["vid"].to_numpy()
@@ -331,7 +328,7 @@ def _make_spmv_kernel(scratch: str):
         x_u = x[order][np.searchsorted(vids[order], sid_u)]
         contrib = w * x_u[sid_codes]
         sums = np.bincount(did_codes, weights=contrib, minlength=len(did_u))
-        return pd.DataFrame({"did": did_u, "c": sums})
+        return pd.DataFrame({"vid": did_u, "c": sums})
 
     return spmv
 
@@ -417,7 +414,8 @@ def _csr_state(graph, B: int, scratch_dir: str | None) -> dict:
     32 cores). Salt 0 collides with probability ~n²/2⁶⁵, so the spill runs
     OPTIMISTICALLY with salt 0 while the verification aggregate runs
     concurrently from a daemon thread (Spark schedules jobs from separate
-    threads concurrently); setup wall becomes max(spill, verify) instead of
+    threads concurrently; an InheritableThread, so the job lands in the
+    caller's job group); setup wall becomes max(spill, verify) instead of
     the sum. On the astronomically rare collision the salt-0 spill is
     discarded and redone with the verified salt — correctness never rides
     on the optimism, only latency does."""
@@ -425,7 +423,7 @@ def _csr_state(graph, B: int, scratch_dir: str | None) -> dict:
     if state is not None and state["B"] == B:
         return state
 
-    import threading
+    from pyspark import InheritableThread
 
     verdict: dict = {}
 
@@ -435,7 +433,7 @@ def _csr_state(graph, B: int, scratch_dir: str | None) -> dict:
         except BaseException as exc:  # surfaces in the caller below
             verdict["err"] = exc
 
-    th = threading.Thread(target=_verify, daemon=True, name="csr-salt-verify")
+    th = InheritableThread(_verify, daemon=True, name="csr-salt-verify")
     th.start()
     scratch = _fresh_scratch(scratch_dir)
     _spill_blocks(graph, salt=0, B=B, scratch=scratch)
@@ -485,45 +483,21 @@ def pagerank_csr(
     including durable checkpoint/resume and x0 warm start."""
     B = num_blocks or graph.num_partitions
     state = _csr_state(graph, B, scratch_dir)
-    return _iterate_csr(
-        graph, alpha, v_df, max_iterations, epsilon, B, metrics,
-        state["scratch"], state["salt"], checkpointer, x0_df,
+    return power_iterate(
+        graph, _csr_spmv(B, state["scratch"], state["salt"]), alpha, v_df,
+        max_iterations, epsilon, checkpointer, metrics, x0_df,
     )
 
 
-def _iterate_csr(
-    graph, alpha, v_df, max_iterations, epsilon, B, metrics, scratch, salt,
-    checkpointer=None, x0_df=None,
-) -> DataFrame:
-    spmv = _make_spmv_kernel(scratch)
+def _csr_spmv(B: int, scratch: str, salt: int) -> SpMV:
+    """P'x by the block kernels over the spill at ``scratch``, keyed by the
+    salted hash id ``vid``. The fold join's output is already hash(vid, B)
+    (contribs arrives hash(vid, B) from its aggregate), so the new vector is
+    not laid out again."""
+    kernel = _make_spmv_kernel(scratch)
     vid = _vid_expr(F.col("url"), salt)
 
-    start_iter = 0
-    resumed = checkpointer.try_resume() if checkpointer is not None else None
-    if resumed is not None:
-        start_iter, x_saved, dangling_mass = resumed
-        # saved state is keyed by url; the hash ids re-derive deterministically
-        x = (
-            x_saved.select("url", "v", "dangling", "rank")
-            .withColumn("vid", vid)
-            .repartition(B, "vid")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        # same state builder as v1 (url, v, dangling, rank) + the hash id
-        x = (
-            _init_state(graph, v_df, x0_df)
-            .withColumn("vid", vid)
-            .repartition(B, "vid")
-            .localCheckpoint(eager=True)
-        )
-        dangling_mass = x.agg(F.sum(F.col("rank") * F.col("dangling"))).first()[0] or 0.0
-
-    prev_ck = x
-    for it in range(start_iter, max_iterations):
-        t0 = time.monotonic()
-        q = alpha * dangling_mass + (1.0 - alpha)
-
+    def contribs(x: DataFrame) -> DataFrame:
         # explicit repartition(B, block): the rank vector is tiny (vertex-
         # sized), and AQE would coalesce the groupBy's internal exchange
         # into ONE partition — serializing every block's SpMV kernel through
@@ -534,61 +508,17 @@ def _iterate_csr(
         xb = x.select(
             "vid", "rank", _block_of(F.col("vid"), B).alias("block")
         ).repartition(B, "block")
-        contribs = (
+        return (
             xb.groupby("block")
-            .applyInPandas(spmv, schema="did long, c double")
+            .applyInPandas(kernel, schema="vid long, c double")
             # explicit repartition: AQE preserves user partition counts, so
             # the aggregate runs exchange-free on top of it and stays aligned
-            # with x's hash(vid, B) layout for the fold join below
-            .repartition(B, "did")
-            .groupBy("did")
+            # with x's hash(vid, B) layout for the fold join
+            .repartition(B, "vid")
+            .groupBy("vid")
             .agg(F.sum("c").alias("_c"))
         )
-        new = (
-            x.join(contribs.hint("merge"), x.vid == contribs.did, "left")
-            .select(
-                x.url,
-                x.vid,
-                x.v,
-                x.dangling,
-                (F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0)) + F.lit(q) * x.v).alias("_xun"),
-                x.rank.alias("_prev"),
-            )
-            # no repartition: the left join preserves x's hash(vid, B) layout
-            # (contribs arrives hash(did, B) from its aggregate), and
-            # localCheckpoint carries the partitioning into the next iteration
-            .localCheckpoint(eager=False)  # materializes in the stats job below
-        )
-        s = new.agg(
-            F.sum(F.col("_xun") * F.col("_xun")).alias("s2"),
-            F.sum(F.col("_xun") * F.col("_prev")).alias("sp"),
-            F.sum(F.col("_xun") * F.col("dangling")).alias("sd"),
-        ).first()
-        norm = math.sqrt(s["s2"])
-        residual = math.sqrt(max(0.0, 2.0 - 2.0 * s["sp"] / norm))
-        dangling_mass = (s["sd"] or 0.0) / norm
 
-        x = new.select(
-            "url", "vid", "v", "dangling", (F.col("_xun") / F.lit(norm)).alias("rank")
-        )
-        if metrics is not None:
-            metrics.append(
-                {"iteration": it, "residual": residual, "norm": norm,
-                 "dangling_mass": dangling_mass, "wall_s": time.monotonic() - t0}
-            )
-        if checkpointer is not None:
-            x_out = x.select("url", "v", "dangling", "rank")
-            saved = checkpointer.save(it, x_out, dangling_mass, residual)
-            if saved is not x_out:
-                # continue from the durable copy (lineage + memory bounded),
-                # re-deriving the hash id from the url
-                x = saved.withColumn("vid", vid).repartition(B, "vid")
-        prev_ck.unpersist()
-        prev_ck = new
-        if residual < epsilon:
-            break
-
-    result = x.select("url", "rank")
-    out = result.localCheckpoint(eager=True)
-    prev_ck.unpersist()
-    return out
+    # state saved or built by url: the hash id re-derives deterministically,
+    # so a resumed run is bit-exact
+    return SpMV("vid", contribs, lambda df: df.withColumn("vid", vid).repartition(B, "vid"))

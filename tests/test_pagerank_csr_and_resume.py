@@ -25,28 +25,31 @@ def test_csr_matches_joinagg_and_oracle(spark):
         g.unpersist()
 
 
-def test_checkpoint_resume_bitexact(spark, tmp_path, golden_graph):
+@pytest.mark.parametrize("method", ["pagerank", "pagerank_csr"])
+def test_checkpoint_resume_bitexact(spark, tmp_path, golden_graph, method):
     """Kill-after-iteration-K scenario: a resumed run must equal an
-    uninterrupted run bit-for-bit."""
+    uninterrupted run bit-for-bit, on both backends (CSR re-derives its hash
+    ids from the saved urls)."""
+    run = getattr(golden_graph, method)
     ckdir_full = str(tmp_path / "full")
     ckdir_killed = str(tmp_path / "killed")
 
     full_ck = IterationCheckpointer(spark, ckdir_full, num_partitions=4, n_edges=10)
     full = {
         r["url"]: r["rank"]
-        for r in golden_graph.pagerank(epsilon=1e-6, checkpointer=full_ck).collect()
+        for r in run(epsilon=1e-6, checkpointer=full_ck).collect()
     }
 
     # simulate a kill: run only 7 iterations (max_iterations=7), manifests stay
     killed_ck = IterationCheckpointer(spark, ckdir_killed, num_partitions=4, n_edges=10)
-    golden_graph.pagerank(epsilon=1e-6, max_iterations=7, checkpointer=killed_ck)
+    run(epsilon=1e-6, max_iterations=7, checkpointer=killed_ck)
     assert killed_ck.latest_complete() == 6
 
     # resume: new checkpointer on the same dir picks up at iteration 7
     resume_ck = IterationCheckpointer(spark, ckdir_killed, num_partitions=4, n_edges=10)
     resumed = {
         r["url"]: r["rank"]
-        for r in golden_graph.pagerank(epsilon=1e-6, checkpointer=resume_ck).collect()
+        for r in run(epsilon=1e-6, checkpointer=resume_ck).collect()
     }
     assert resumed == full  # bit-for-bit: dict equality on float64
 
@@ -98,6 +101,7 @@ def test_csr_unshared_scratch_refuses_instead_of_garbage(spark, tmp_path):
     import shutil
 
     from pagerank_spark.operators import pagerank_csr as mod
+    from pagerank_spark.operators.pagerank import power_iterate
 
     edges = synth_edges(n_vertices=30, n_edges=100, seed=3)
     raw = spark.createDataFrame(edges, ["src", "dst"])
@@ -115,8 +119,8 @@ def test_csr_unshared_scratch_refuses_instead_of_garbage(spark, tmp_path):
         os.remove(f"{b_view}/{mod._MANIFEST}")
 
         with pytest.raises(Exception) as ei:
-            mod._iterate_csr(g, 0.85, None, 2, 1e-6, 3, None,
-                             b_view, state["salt"]).collect()
+            power_iterate(g, mod._csr_spmv(3, b_view, state["salt"]),
+                          max_iterations=2).collect()
         assert "no readable" in str(ei.value) or "_MANIFEST" in str(ei.value)
     finally:
         g.unpersist()

@@ -144,6 +144,28 @@ def test_csr_spmv_stage_keeps_block_parallelism(spark):
     assert xb.rdd.getNumPartitions() == B
 
 
+@pytest.mark.parametrize("method,max_overhead", [("pagerank", 11), ("pagerank_csr", 10)])
+def test_pagerank_job_budget(spark, golden_graph, method, max_overhead):
+    # both backends run one shared loop: 5 Spark jobs per iteration (AQE
+    # runs each query stage of the fused stats action as its own job) on
+    # top of a fixed setup/teardown overhead that must not grow
+    sc = spark.sparkContext
+    run = getattr(golden_graph, method)
+    run(max_iterations=1).count()  # warm graph caches and the CSR spill
+    jobs = {}
+    for k in (2, 4):
+        group = f"job-budget-{method}-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            run(epsilon=0.0, max_iterations=k).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    per_iter = (jobs[4] - jobs[2]) / 2
+    assert per_iter == 5, jobs
+    assert jobs[2] - 2 * per_iter <= max_overhead, jobs
+
+
 def test_bucketed_edge_table_join_and_agg_are_exchange_free(spark, tmp_path):
     # the co-location contract: a bucketed+sorted edge table joins on its
     # bucket key and aggregates by it without any Exchange — at 100 TB that

@@ -103,19 +103,27 @@ def test_windowed_indegree_stream(spark, tmp_path):
 
 
 def test_cli_end_to_end_golden(spark, tmp_path, caplog):
+    import gzip
     import logging
 
     from pagerank_spark.cli import build_parser, main
+    from pagerank_spark.fixtures import GOLDEN_SMALL_EDGES
 
     # argparse surface mirrors the reference (pagerank.py:245-257)
     p = build_parser()
     a = p.parse_args(["--data", "x.csv", "--alpha", "0.9", "--search_query", "q -neg"])
     assert a.alpha == 0.9 and a.search_query == "q -neg"
 
+    # the reference's input format: gzipped CSV with a source,target header
+    data = tmp_path / "small.csv.gz"
+    with gzip.open(data, "wt") as f:
+        f.write("source,target\n")
+        f.writelines(f"{s},{t}\n" for s, t in GOLDEN_SMALL_EDGES)
+
     with caplog.at_level(logging.INFO, logger="pagerank_spark"):
         rc = main(
             [
-                "--data", "/root/reference/small.csv.gz",
+                "--data", str(data),
                 "--no_regex_filter",
                 "--max_results", "3",
             ],
