@@ -8304,7 +8304,7 @@ h AS (SELECT dst AS key, CAST(COUNT(*) AS BIGINT) AS n_rows_key
 s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
              CAST(SUM(n_rows_key) AS BIGINT) AS total_rows FROM h),
 t AS (SELECT key, n_rows_key FROM h
-      ORDER BY n_rows_key DESC, key ASC LIMIT 10)
+      ORDER BY n_rows_key DESC, key ASC NULLS LAST LIMIT 10)
 SELECT t.key, t.n_rows_key, s.n_keys, s.total_rows,
        ROUND(CAST(s.total_rows AS DOUBLE) / s.n_keys, 6)
          AS mean_rows_per_key,

@@ -37,7 +37,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max_iterations", type=int, default=1000)
     p.add_argument("--epsilon", type=float, default=1e-6)
     p.add_argument("--max_results", type=int, default=10)
-    p.add_argument("--max_nnz", type=int, default=None)
+    p.add_argument("--max_nnz", type=int, default=None,
+                   help="keep the first max_nnz+1 raw edges (reference "
+                        "pagerank.py:40-41). On a pages table, edges come "
+                        "in extraction order, which is not a total order: "
+                        "a deterministic cut needs a totally ordered edge "
+                        "table")
     p.add_argument("--no_regex_filter", action="store_true",
                    help="skip the reference's multi-segment/trailing-slash url filter")
     p.add_argument("--checkpoint_dir", default=None,

@@ -16,6 +16,17 @@ lazy DataFrame chain so Catalyst pushes filters into the scan:
     -> repartition(P, 'src') + persist   (scale: co-partition with ranks so the
                                           per-iteration join is shuffle-free)
 
+The regex filter is the reference's ``.*((/$)|(/.*/)).*`` with its ``.*``
+affixes dropped: ``rlike`` is Java ``Matcher.find``, which may start and end a
+match anywhere, and ``.*`` can match the empty string, so
+``find(".*X.*") == find("X")`` on every string. ``$`` and ``.`` still see line
+terminators exactly as before (tests/test_properties.py checks both spellings
+row for row over every Java line terminator). The affixes only made the
+matcher backtrack: filtering 43.6k crawl-shaped raw edges at local[4] on a
+4-core box takes ~0.2 s without them and 0.5-0.7 s with them (warm, counted
+alone). The NumPy oracle and the DuckDB twin keep the reference spelling,
+so they stay independent witnesses.
+
 Vertices are keyed by url string throughout — the reference's dense-int
 dictionary (pagerank.py:81-94) exists only because torch needs integer
 indices; Spark joins on strings directly. Dense ids are materialized lazily
@@ -27,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EDGE_FILTER_REGEX = r".*((/$)|(/.*/)).*"
+# reference pagerank.py:42-45 spells it ".*((/$)|(/.*/)).*" (module docstring)
+EDGE_FILTER_REGEX = r"/$|/.*/"
 
 
 class LinkGraph:
@@ -118,6 +130,10 @@ class LinkGraph:
         """Build from a Common-Crawl-style pages table (url, warc_ts, html, ...).
 
         Extracts one edge per <a href> via the Arrow-vectorized extractor.
+        Extraction order is not a total order (the extractor rebalances
+        pages across tasks): with ``max_nnz=K`` the K+1 edges kept are any
+        K+1 of them. For a deterministic cut, order the extracted edges
+        totally and pass them to ``from_edges``.
         """
         from pagerank_spark.functions.extract import extract_edges_df
 

@@ -37,8 +37,8 @@ def skew_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
     skew_factor) — the ``top_k`` heaviest join/groupBy keys with the
     table-wide context: skew_factor = key rows / mean rows per key (the
     heaviest row's factor is the one compared against AQE's
-    skewedPartitionFactor). Deterministic (count desc, key asc);
-    NULL keys count as a key.
+    skewedPartitionFactor). Deterministic (count desc, key asc with
+    NULL last, as DuckDB's ASC); NULL keys count as a key.
 
     Shape: ONE map-side-combined key histogram, a 1-row stats aggregate,
     and a TakeOrdered top-k — the corpus never moves unaggregated."""
@@ -51,7 +51,7 @@ def skew_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.sum("n_rows_key").cast("long").alias("total_rows"),
     )
-    top = hist.orderBy(F.desc("n_rows_key"), F.col("key").asc()).limit(int(top_k))
+    top = hist.orderBy(F.desc("n_rows_key"), F.col("key").asc_nulls_last()).limit(int(top_k))
     return top.crossJoin(F.broadcast(stats)).select(
         "key",
         "n_rows_key",

@@ -524,6 +524,56 @@ def test_extract_links_single_arrow_crossing_jvm_explode(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
+def _plan_nodes(plan):
+    """Pre-order walk of a physical plan (JVM object), through AQE."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+@pytest.mark.parametrize(
+    "extractor",
+    [
+        "extract_text_df",
+        "extract_edges_df",
+        "extract_links_df",
+        "extract_anchors_df",
+        "extract_robots_df",
+        "extract_canonicals_df",
+        "extract_titles_df",
+        "html_tag_stats_df",
+    ],
+)
+def test_extractor_parses_rebalanced_url_html(spark, extractor):
+    # the parser's tasks must not inherit the scan's I/O-sized splits: one
+    # ArrowEvalPython reading a keyless rebalance exchange, and only the
+    # parsed columns (url, html) cross that shuffle
+    from pagerank_spark.functions import extract
+    from pagerank_spark.sources.table_io import PAGES_SCHEMA
+
+    pages = spark.createDataFrame(
+        [("h.test/p", None, b'<a href="/x">x</a>', "x", "en")], PAGES_SCHEMA
+    )
+    plan = getattr(extract, extractor)(pages)._jdf.queryExecution().executedPlan()
+    nodes = list(_plan_nodes(plan))
+    arrow = [n for n in nodes if n.nodeName() == "ArrowEvalPython"]
+    assert len(arrow) == 1, [n.nodeName() for n in nodes]
+    rebalance = [
+        n for n in nodes
+        if n.nodeName() == "Exchange"
+        and n.shuffleOrigin().toString() == "REBALANCE_PARTITIONS_BY_NONE"
+    ]
+    assert len(rebalance) == 1, [n.nodeName() for n in nodes]
+    below_arrow = list(_plan_nodes(arrow[0]))
+    assert any(n.equals(rebalance[0]) for n in below_arrow)
+    out = rebalance[0].child().output()
+    cols = {out.apply(i).name() for i in range(out.size())}
+    assert cols == {"url", "html"}, cols
+
+
 @pytest.fixture(scope="module")
 def events_df(spark):
     import datetime as dt

@@ -6,6 +6,7 @@
   * duplicating an edge equals doubling its weight
   * components / labels / triangles match exact oracles
   * query expansion returns the embedding-nearest words
+  * the engine's edge regex flags exactly the rows the reference's does
 
 One seeded hypothesis-style sweep (explicit seeds, not @given — each case
 costs a Spark fixpoint, so the search budget is fixed and deterministic).
@@ -184,3 +185,37 @@ def test_pagerank_x0_warm_start(spark):
     for u in cold:
         assert abs(cold[u] - warm[u]) < 1e-6, u
     g.unpersist()
+
+
+def test_edge_regex_matches_reference_spelling(spark):
+    # rlike is Matcher.find, so the reference's leading/trailing .* affixes
+    # (pagerank.py:42-45) change nothing: same verdict on every row. The
+    # alphabet holds every Java line terminator, where `$` and `.` differ.
+    from pyspark.sql import types as T
+
+    from pagerank_spark.operators.graph_build import EDGE_FILTER_REGEX
+
+    reference = r".*((/$)|(/.*/)).*"
+    alphabet = ["a", ".", "/", "\n", "\r", "\u0085", "\u2028", "\u2029"]
+    rng = random.Random(17)
+    cases = {
+        "a/": True, "a/\n": True, "a/\r\n": True, "/": True, "//": True,
+        "a/b/c": True, "a\n/b/": True, "a/\nb/": True,
+        "www.x.test/p1": False, "": False,
+    }
+    rows = [(s,) for s in cases] + [(None,)] + [
+        ("".join(rng.choice(alphabet) for _ in range(rng.randrange(9))),)
+        for _ in range(2000)
+    ]
+    df = spark.createDataFrame(rows, T.StructType([T.StructField("s", T.StringType())]))
+    got = df.select(
+        "s",
+        F.col("s").rlike(reference).alias("ref"),
+        F.col("s").rlike(EDGE_FILTER_REGEX).alias("eng"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert r["ref"] == r["eng"], repr(r["s"])
+    verdict = {r["s"]: r["ref"] for r in got}
+    assert {s: verdict[s] for s in cases} == cases
+    assert verdict[None] is None

@@ -24,6 +24,11 @@ def test_skew_report_tie_break_and_validation(spark):
     df = spark.createDataFrame([("b",), ("a",)], ["k"])
     got = skew_report(df, "k", top_k=2).collect()
     assert [r["key"] for r in got] == ["a", "b"]  # equal counts: key asc
+    # a NULL key tied at the top_k boundary sorts last, as under the
+    # DuckDB twin's ASC; Spark's bare asc() would put it first
+    nulls = spark.createDataFrame([("hot",)] * 3 + [(None,)] * 2 + [("b",)] * 2, "k STRING")
+    assert [r["key"] for r in skew_report(nulls, "k", top_k=2).collect()] == ["hot", "b"]
+    assert [r["key"] for r in skew_report(nulls, "k", top_k=3).collect()] == ["hot", "b", None]
     with pytest.raises(ValueError):
         skew_report(df, "k", top_k=0)
 
