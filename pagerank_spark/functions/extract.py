@@ -21,18 +21,26 @@ Python crosses the executor boundary only as pandas UDFs over Arrow batches
 (input_hint mandate) — the per-batch loop is a pandas Series.map over the
 batch, never a Spark-row-at-a-time UDF.
 
-Every extractor reads its pages through one keyless rebalance exchange
-(`_parser_input`): the parser is CPU-bound, but a scan's splits are sized
-for I/O, so a pages file with one parquet row group feeds the whole parse
-to one task. AQE sizes the rebalanced partitions: with `parallelismFirst`
-(the default) 40 MB of pages spread over every core, tiny inputs (tests,
-streaming micro-batches) coalesce to one partition, and at scale partitions
-approach the 64 MB advisory size. Only `url` and `html` cross the shuffle.
-The trade, measured on 4000 pages of ~10 KB (38 MB) at local[4] on a 4-core
-box: the exchange costs ~0.31 s (~78 us per page) and parsing ~1.5 ms per
-page, so on input that is already balanced the rebalance adds ~5 % to the
-extract stage; on a single split it turns one parsing task into four (the
-stage's slowest task sets its wall).
+The eight `*_df` extractors below (the seven `extract_*_df` and
+`html_tag_stats_df`) read their pages through one keyless rebalance
+exchange (`_parser_input`): the parser is CPU-bound, but a scan's splits
+are sized for I/O, so a pages file with one parquet row group feeds the
+whole parse to one task. AQE sizes the rebalanced partitions: with
+`parallelismFirst` (the default) 40 MB of pages spread over every core,
+tiny inputs coalesce to one partition, and at scale partitions approach the
+64 MB advisory size. Only `url` and `html` cross the shuffle. The trade,
+`extract_edges_df` + count on 4000 pages of ~10 KB at local[4] on a 4-core
+box, median of 12 alternated runs without/with the rebalance: one parquet
+row group 7.2 s -> 2.9 s; the same pages as four equal files (already one
+split per core) 2.72 s -> 2.81 s, i.e. ~0.1 s (~25 us per page) for the
+exchange. The rebalance is unconditional: the split count is not known
+before planning, and reading it from `df.rdd` would run the input's own
+shuffles ahead of the real job under AQE.
+
+`streaming/ingest.py` `extract_edges_stream` calls the parser UDF on the
+stream's own splits on purpose. AQE does not run on streaming queries, so
+a rebalance there would not coalesce; it would shuffle every micro-batch
+round-robin into `spark.sql.shuffle.partitions` partitions.
 """
 
 from __future__ import annotations
