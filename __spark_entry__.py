@@ -7771,7 +7771,7 @@ FROM pr GROUP BY l, r
 
     # speculative coloring: recursive replay of the synchronous rounds —
     # every uncolored vertex picks its mex over colored neighbors; a
-    # same-pick neighbor with smaller md5 priority makes it retry. `it`
+    # same-pick neighbor with smaller (md5 priority, url) makes it retry. `it`
     # inside the recursion = the previous round's full vertex state; the
     # pick is a correlated macro so the same expression prices p and its
     # conflicting neighbor.
@@ -7781,6 +7781,9 @@ FROM pr GROUP BY l, r
             "SELECT q2.color FROM jadj a2 JOIN it q2 ON q2.url = a2.v "
             f"WHERE a2.u = {urlref} AND q2.color IS NOT NULL)) AS INT)"
         )
+
+    def _jp_pri(urlref: str) -> str:
+        return f"('0x' || substr(md5({urlref}), 1, 15))::BIGINT"
 
     sqls["coloring"] = f"""
 WITH RECURSIVE jg AS ({G_SQL}),
@@ -7800,8 +7803,8 @@ it(iter, url, color) AS (
       WHEN NOT EXISTS (
         SELECT 1 FROM jadj a JOIN it qn ON qn.url = a.v
         WHERE a.u = p.url AND qn.color IS NULL
-          AND ('0x' || substr(md5(qn.url), 1, 15))::BIGINT
-              < ('0x' || substr(md5(p.url), 1, 15))::BIGINT
+          AND ({_jp_pri("qn.url")} < {_jp_pri("p.url")}
+               OR ({_jp_pri("qn.url")} = {_jp_pri("p.url")} AND qn.url < p.url))
           AND {_jp_pick("qn.url")} = {_jp_pick("p.url")}
       ) THEN {_jp_pick("p.url")}
       ELSE NULL END

@@ -27,8 +27,10 @@ parallel-safe transaction rounds.
 Determinism: priority = the 60-bit md5 of the url (textops.hexint15), a
 pure function both engines recompute inline — no priority table ever
 shuffles, and the DuckDB twin replays the identical synchronous rounds.
-A 60-bit tie between neighbors (~2^-60/pair) can stall; ``max_rounds``
-+ the no-progress check raise instead of looping.
+A 60-bit tie between neighbors (~2^-60/pair) is broken by the url, so
+(priority, url) is a total order: of two same-pick neighbors exactly one
+retries, and the coloring stays proper. ``max_rounds`` + the no-progress
+check still raise instead of looping.
 
 Scale shape per round: ONE vertex-sized state table (the scc/kcore
 cadence — one eager localCheckpoint + one count per round, plus one for
@@ -45,6 +47,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.textops import hexint15
+
+
+def _priority(col: str):
+    """(60-bit md5 priority, url): a total order, so a tie has one winner."""
+    return F.struct(hexint15(F.col(col)).alias("p"), F.col(col).alias("url"))
 
 
 def greedy_coloring(
@@ -87,8 +94,7 @@ def greedy_coloring(
         rounds += 1
         if rounds > max_rounds:
             raise RuntimeError(
-                f"greedy_coloring did not finish in {max_rounds} rounds "
-                "(a 60-bit priority tie between neighbors can stall a round)"
+                f"greedy_coloring did not finish in {max_rounds} rounds"
             )
         unc = state.where(F.col("color").isNull()).select("url")
         # speculative pick: mex over the COLORED neighborhood, for every
@@ -115,7 +121,7 @@ def greedy_coloring(
             .localCheckpoint(eager=True)  # read twice: conflict probe + merge
         )
         # conflict: an adjacent same-round same-pick neighbor with smaller
-        # priority wins; the loser drops its pick and retries
+        # (priority, url) wins; the loser drops its pick and retries
         losers = (
             adj.join(
                 picks.select(F.col("url").alias("u"), F.col("_pick").alias("_pu")),
@@ -127,7 +133,7 @@ def greedy_coloring(
             )
             .where(
                 (F.col("_pu") == F.col("_pv"))
-                & (hexint15(F.col("v")) < hexint15(F.col("u")))
+                & (_priority("v") < _priority("u"))
             )
             .select(F.col("u").alias("url"))
             .distinct()
@@ -146,7 +152,7 @@ def greedy_coloring(
         picks.unpersist()
         state = nxt
         if n_nxt >= n_unc:
-            raise RuntimeError("greedy_coloring stalled (60-bit priority tie)")
+            raise RuntimeError("greedy_coloring stalled (no vertex kept its pick)")
         n_unc = n_nxt
     adj.unpersist()
     return state.select("url", "color")

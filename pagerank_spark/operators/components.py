@@ -10,13 +10,17 @@ no vertex-count-sized collect, so it survives 10^12-vertex scale.
   small-star(u): for neighbors v <= u, connect v (and u) to m = min(N(u) ∪ {u})
 
 Vertex ids are compared as strings (lexicographic) — consistent with the
-union-find oracle (oracle/graph_np.py). Component id = min member.
+union-find oracle (oracle/graph_np.py). Component id = min member. The
+rounds run on plans/fixpoint.iterate; each round's one action is the
+edge-set fingerprint that decides convergence.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import iterate, materialize
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -75,7 +79,10 @@ def connected_components(
 ) -> DataFrame:
     """Return (url, component) — component id = min vertex id in the component.
 
-    Isolated vertices (only self-loops) map to themselves.
+    Isolated vertices (only self-loops) map to themselves. Raises
+    RuntimeError when the edge set is still changing after
+    ``max_iterations`` rounds; ``bipartite_check`` and
+    ``incremental_components`` inherit the raise.
 
     ``broadcast_mins``: the per-vertex min table is vertex-sized; broadcast
     it (auto when < 10M vertices) so each star round shuffles only the
@@ -92,40 +99,41 @@ def connected_components(
     )
     if broadcast_mins is None:
         broadcast_mins = all_vertices.count() < 10_000_000
-    def _checksum(df: DataFrame):
-        # the edge set is distinct, so (count, sum of per-row hashes) is an
-        # order-insensitive set fingerprint; equality <=> same set up to a
-        # 2^-64 collision. ONE aggregate job, which doubles as the action
-        # that materializes the lazy checkpoint.
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: exact, no int64 overflow under ANSI
-            F.sum(F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (r["n"], r["h"])
+    # the edge set is distinct, so (count, sum of per-row hashes) is an
+    # order-insensitive set fingerprint; equality <=> same set up to a
+    # 2^-64 collision. It is each round's one action, which also
+    # materializes the round's lazy checkpoint.
+    signature = [
+        F.count(F.lit(1)).alias("n"),
+        # decimal(38,0) accumulator: exact, no int64 overflow under ANSI
+        F.sum(F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")).alias("h"),
+    ]
+    e, sig = materialize(_canonical(edges).repartition(num_partitions, "u"), signature)
 
-    e = _canonical(edges).repartition(num_partitions, "u").localCheckpoint(eager=False)
-    sig = _checksum(e)
-    for _ in range(max_iterations):
-        e2 = _small_star(_large_star(e, broadcast_mins), broadcast_mins)
-        e2 = e2.repartition(num_partitions, "u").localCheckpoint(eager=False)
-        sig2 = _checksum(e2)
-        changed = sig2 != sig
-        old = e
-        e, sig = e2, sig2
-        old.unpersist()
-        if not changed:
-            break
-    # e is now child -> root (stars); roots and isolated vertices map to self
-    labels = e.select(F.col("u").alias("url"), F.col("v").alias("component"))
-    out = (
-        all_vertices.join(labels, "url", "left")
-        .select("url", F.coalesce(F.col("component"), F.col("url")).alias("component"))
-    )
-    result = out.localCheckpoint(eager=True)
-    all_vertices.unpersist()
-    e.unpersist()
-    return result
+    def project(e2: DataFrame, sig2, _k: int):
+        nonlocal sig
+        changed, sig = sig2 != sig, sig2
+        return e2, {"changed": changed}
+
+    try:
+        e = iterate(
+            "connected_components", e,
+            lambda e, _k: _small_star(_large_star(e, broadcast_mins), broadcast_mins)
+            .repartition(num_partitions, "u"),
+            range(max_iterations), stats=signature, project=project,
+            stop=lambda r: not r["changed"], strict=True,
+        )
+        # e is now child -> root (stars); roots and isolated vertices map to self
+        labels = e.select(F.col("u").alias("url"), F.col("v").alias("component"))
+        result = (
+            all_vertices.join(labels, "url", "left")
+            .select("url", F.coalesce(F.col("component"), F.col("url")).alias("component"))
+            .localCheckpoint(eager=True)
+        )
+        e.unpersist()
+        return result
+    finally:
+        all_vertices.unpersist()
 
 
 def bipartite_check(

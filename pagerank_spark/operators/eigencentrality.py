@@ -21,14 +21,19 @@ recipe); sqrt and the division are single IEEE-754 ops on identical
 inputs. Scale shape: identical to the katz/PageRank-v1 loop — the
 distinct edge table is hash-partitioned by ``src`` once and persisted,
 each round shuffles only the vertex-sized score vector plus one
-map-side-combined sum by ``dst`` and a 1-row norm aggregate broadcast
-back; lineage is cut per round with an eager localCheckpoint.
+map-side-combined sum by ``dst``. The rounds run on plans/fixpoint.iterate:
+the norm aggregate is the round's one action (it materializes the lazy
+checkpoint that cuts lineage), and the normalization divides by it as a
+``lit()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.katz import _src_layout
+from pagerank_spark.plans.fixpoint import iterate
 
 
 def eigenvector_centrality(
@@ -44,58 +49,31 @@ def eigenvector_centrality(
     vector is returned rather than a 0/0 artifact."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = (
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
+    e, verts, n = _src_layout(edges, num_partitions, distinct=True)
+
+    def step(x: DataFrame, _k: int) -> DataFrame:
+        contrib = (
+            e.join(x.withColumnRenamed("url", "src"), "src")
+            .groupBy(F.col("dst").alias("url"))
+            .agg(F.sum(F.col("x").cast("decimal(38,9)")).cast("double").alias("_y"))
         )
-        .distinct()
-    )
-    e = e.repartition(num_partitions, "src") if num_partitions else e.repartition("src")
-    e = e.persist()
-    verts = (
-        e.select(F.col("src").alias("url"))
-        .union(e.select(F.col("dst").alias("url")))
-        .distinct()
-        .persist()
-    )
-    n = verts.count()
+        return verts.join(contrib, "url", "left").select(
+            "url", F.coalesce(F.col("_y"), F.lit(0.0)).alias("_y")
+        )
+
+    def project(y: DataFrame, s, _k: int):
+        nrm = s["_n"]
+        x = F.round(F.col("_y") / F.lit(nrm), 9) if nrm else F.lit(0.0)
+        return y.select("url", x.alias("x")), None
+
+    # squared norm: 15dp-quantized squares summed in DECIMAL(38,15)
+    sq = F.round(F.col("_y") * F.col("_y"), 15).cast("decimal(38,15)")
+    x0 = verts.withColumn("x", F.round(F.lit(1.0) / F.sqrt(F.lit(float(n))), 9))
     try:
-        x = verts.withColumn(
-            "x", F.round(F.lit(1.0) / F.sqrt(F.lit(float(n))), 9)
-        ).localCheckpoint(eager=True)
-        for _ in range(iterations):
-            contrib = (
-                e.join(x.withColumnRenamed("url", "src"), "src")
-                .groupBy(F.col("dst").alias("url"))
-                .agg(
-                    F.sum(F.col("x").cast("decimal(38,9)"))
-                    .cast("double")
-                    .alias("_y")
-                )
-            )
-            y = verts.join(contrib, "url", "left").select(
-                "url", F.coalesce(F.col("_y"), F.lit(0.0)).alias("_y")
-            )
-            nrm = y.agg(
-                F.sqrt(
-                    F.sum(
-                        F.round(F.col("_y") * F.col("_y"), 15).cast("decimal(38,15)")
-                    ).cast("double")
-                ).alias("_n")
-            )
-            x = (
-                y.crossJoin(F.broadcast(nrm))
-                .select(
-                    "url",
-                    F.when(
-                        F.col("_n") > 0, F.round(F.col("_y") / F.col("_n"), 9)
-                    )
-                    .otherwise(F.lit(0.0))
-                    .alias("x"),
-                )
-                .localCheckpoint(eager=True)
-            )
+        x = iterate(
+            "eigenvector", x0, step, range(iterations),
+            stats=[F.sqrt(F.sum(sq).cast("double")).alias("_n")], project=project,
+        )
         return x.select("url", F.col("x").alias("eig"))
     finally:
         e.unpersist()

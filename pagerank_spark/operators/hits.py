@@ -11,16 +11,13 @@ answer, so it rides the same join-agg machinery as operators/pagerank.py:
 hubs from the CURRENT authorities). Edges are DISTINCT (0/1 adjacency, the
 textbook formulation — multi-edges do not multiply influence).
 
-Job cadence (the scale-critical part, same pattern as pagerank.py:19-24):
-each half-round is ONE Spark job. The joined+aggregated score vector is a
-LAZY localCheckpoint that materializes during the fused L2-norm aggregate,
-and the normalization is a projection over the checkpointed blocks —
-`x / lit(norm)` — consumed by the NEXT half-round's join, never a separate
-action. A full HITS round therefore costs exactly 2 jobs; the previous
-design paid 4 (eager checkpoint + separate `.first()` norm per half-round),
-which at cluster scale quadruples the per-job driver latency floor for
-nothing. `metrics` records per-half-round norms/wall so a test can pin the
-job count (tests/test_hits.py::test_hits_one_job_per_half_round).
+Round cadence: the state is ONE (url, a, h) frame and every half-round is
+one round of plans/fixpoint.iterate — one action, the fused L2-norm
+aggregate that materializes the new frame's lazy localCheckpoint (under
+AQE that action runs several Spark jobs). The normalization is a
+projection over the checkpointed blocks — `x / lit(norm)` — consumed by the
+next half-round's join, never a separate action. `metrics` records
+per-half-round norms/wall (tests/test_hits.py pins the action count).
 
 Broadcast policy, mirroring pagerank.py:120-124: the score vector is
 vertex-sized, so it broadcasts while small and the distinct edge set — the
@@ -39,10 +36,10 @@ recurrence unrolled (no convergence-epsilon cross-engine coupling).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import iterate
 
 BROADCAST_VERTEX_THRESHOLD = 10_000_000
 
@@ -56,23 +53,25 @@ def resolve_broadcast(flag: bool | None, n_vertices: int,
     return (n_vertices < threshold) if flag is None else bool(flag)
 
 
-def _half_round(e: DataFrame, scores: DataFrame, verts: DataFrame,
-                join_key: str, group_key: str, in_col: str, out_col: str,
-                broadcast: bool) -> DataFrame:
-    """One HITS half-round pre-normalization: pull `in_col` across the edges
-    (scores keyed to `join_key`), sum into `group_key`, resurrect zero-mass
-    vertices. Pure plan construction — exposed so plan audits can assert the
+def _half_round(e: DataFrame, state: DataFrame, side: str, broadcast: bool) -> DataFrame:
+    """One HITS half-round pre-normalization over the (url, a, h) state:
+    recompute ``side`` ('a' from h, 'h' from a) by pulling the other score
+    across the edges and summing per vertex; zero-mass vertices score 0.
+    Pure plan construction — exposed so plan audits can assert the
     broadcast policy flips the physical join strategy with input size."""
-    s = scores.select(F.col("url").alias(join_key), F.col(in_col))
+    join_key, group_key, in_col = ("src", "dst", "h") if side == "a" else ("dst", "src", "a")
+    s = state.select(F.col("url").alias(join_key), F.col(in_col))
     if broadcast:
         s = F.broadcast(s)
     agg = (
         e.join(s, join_key)
-        .groupBy(group_key)
-        .agg(F.sum(in_col).alias(out_col))
-        .withColumnRenamed(group_key, "url")
+        .groupBy(F.col(group_key).alias("url"))
+        .agg(F.sum(in_col).alias("_s"))
     )
-    return verts.join(agg, "url", "left").fillna(0.0, [out_col])
+    return state.join(agg, "url", "left").select(
+        "url",
+        *(F.coalesce("_s", F.lit(0.0)).alias(c) if c == side else c for c in "ah"),
+    )
 
 
 def hits(
@@ -107,61 +106,27 @@ def hits(
             "url", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
     broadcast = resolve_broadcast(broadcast_scores, n, broadcast_threshold)
-    h = verts.withColumn("h", F.lit(1.0 / float(n) ** 0.5))
 
-    a = None
-    prev_ck = {"a": None, "h": None}
+    # half-round k: authorities from the previous hubs (even k), then hubs
+    # from the current authorities (odd k) — the immediate-update order
+    def project(raw: DataFrame, s, k: int):
+        side = "ah"[k % 2]
+        l2 = s[side]
+        x = raw.withColumn(side, F.col(side) / F.lit(float(l2))) if l2 else raw
+        return x, {"round": k // 2, "side": side, "norm": l2}
 
-    def _normalized(raw: DataFrame, col: str, rnd: int) -> DataFrame:
-        # ONE job per half-round: the lazy checkpoint materializes inside
-        # the norm aggregate, and the normalization is a projection over the
-        # checkpointed blocks that the NEXT half-round's join consumes.
-        t0 = time.monotonic()
-        ck = raw.localCheckpoint(eager=False)
-        l2 = ck.agg(F.sqrt(F.sum(F.col(col) * F.col(col)))).first()[0]
-        if metrics is not None:
-            metrics.append({"round": rnd, "side": col, "norm": l2,
-                            "wall_s": time.monotonic() - t0})
-        # the previous checkpoint of this side fed the join that just
-        # materialized; nothing later reads it
-        if prev_ck[col] is not None:
-            try:
-                prev_ck[col].unpersist()
-            except Exception:
-                pass
-        prev_ck[col] = ck
-        if not l2 or l2 <= 0:
-            return ck
-        return ck.withColumn(col, F.col(col) / F.lit(float(l2)))
-
-    for rnd in range(iterations):
-        # authorities from previous hubs
-        a = _normalized(
-            _half_round(e, h, verts, "src", "dst", "h", "a", broadcast)
-            .select("url", "a"),
-            "a", rnd,
-        )
-        # hubs from current authorities
-        h = _normalized(
-            _half_round(e, a, verts, "dst", "src", "a", "h", broadcast)
-            .select("url", "h"),
-            "h", rnd,
-        )
-    out = (
-        verts.join(h, "url", "left")
-        .join(a, "url", "left")
-        .select(
-            "url",
-            F.round(F.coalesce("h", F.lit(0.0)), 6).alias("hub"),
-            F.round(F.coalesce("a", F.lit(0.0)), 6).alias("authority"),
-        )
-        .localCheckpoint(eager=True)  # materialize while e is still cached
+    state = iterate(
+        "hits",
+        verts.select("url", F.lit(0.0).alias("a"), F.lit(1.0 / float(n) ** 0.5).alias("h")),
+        lambda x, k: _half_round(e, x, "ah"[k % 2], broadcast),
+        range(2 * iterations),
+        # both norms in the one aggregate; the half-round reads its own side's
+        stats=[F.sqrt(F.sum(F.col(c) * F.col(c))).alias(c) for c in "ah"],
+        project=project, metrics=metrics,
     )
     e.unpersist()
-    for ck in prev_ck.values():
-        if ck is not None:
-            try:
-                ck.unpersist()
-            except Exception:
-                pass
-    return out
+    return state.select(
+        "url",
+        F.round("h", 6).alias("hub"),
+        F.round("a", 6).alias("authority"),
+    )

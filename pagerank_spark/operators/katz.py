@@ -17,7 +17,8 @@ Spark shape — same scale story as the PageRank v1 loop (operators/pagerank.py)
 the edge table is hash-partitioned by ``src`` ONCE and persisted; each
 iteration shuffles only the vertex-sized score vector into that layout
 (sort-merge join against the cached side, no edge movement), then one
-map-side-combined sum by ``dst``. A fixed iteration count K keeps the
+map-side-combined sum by ``dst``; the rounds run on plans/fixpoint.iterate
+(one eager localCheckpoint per round). A fixed iteration count K keeps the
 semantics exactly reproducible in the DuckDB oracle (a recursive CTE runs
 the identical update), the same spelling label_propagation3 uses.
 """
@@ -26,6 +27,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import iterate
+
+
+def _src_layout(edges: DataFrame, num_partitions: int | None, distinct: bool = False):
+    """(e, verts, n): the (src, dst) string edges (``distinct`` collapses
+    multi-edges) hash-partitioned by src, the vertex set, both persisted
+    and materialized, and the vertex count. The caller unpersists both."""
+    e = edges.select(
+        F.col("src").cast("string").alias("src"),
+        F.col("dst").cast("string").alias("dst"),
+    )
+    e = e.distinct() if distinct else e
+    e = e.repartition(num_partitions, "src") if num_partitions else e.repartition("src")
+    e = e.persist()
+    verts = (
+        e.select(F.col("src").alias("url"))
+        .union(e.select(F.col("dst").alias("url")))
+        .distinct()
+        .persist()
+    )
+    return e, verts, verts.count()
 
 
 def katz_centrality(
@@ -46,43 +69,28 @@ def katz_centrality(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(
-        F.col("src").cast("string").alias("src"),
-        F.col("dst").cast("string").alias("dst"),
-    )
-    if num_partitions:
-        e = e.repartition(num_partitions, "src")
-    else:
-        e = e.repartition("src")
-    e = e.persist()
-    verts = (
-        e.select(F.col("src").alias("url"))
-        .union(e.select(F.col("dst").alias("url")))
-        .distinct()
-        .persist()
-    )
-    verts.count()  # materialize both caches before the loop
+    e, verts, _ = _src_layout(edges, num_partitions)
+
+    def step(x: DataFrame, _k: int) -> DataFrame:
+        contrib = (
+            e.join(x.withColumnRenamed("url", "src"), "src")
+            .groupBy(F.col("dst").alias("url"))
+            .agg(F.sum("x").alias("c"))
+        )
+        return (
+            verts.join(contrib, "url", "left")
+            .withColumn(
+                "x",
+                F.lit(float(alpha)) * F.coalesce(F.col("c"), F.lit(0.0))
+                + F.lit(float(beta)),
+            )
+            .drop("c")
+        )
+
     try:
         # x after iteration 1: alpha * A^T * 0 + beta = beta everywhere
-        x = verts.withColumn("x", F.lit(float(beta)))
-        for _ in range(1, iterations):
-            contrib = (
-                e.join(x.withColumnRenamed("url", "src"), "src")
-                .groupBy(F.col("dst").alias("url"))
-                .agg(F.sum("x").alias("c"))
-            )
-            x = (
-                verts.join(contrib, "url", "left")
-                .withColumn(
-                    "x",
-                    F.lit(float(alpha)) * F.coalesce(F.col("c"), F.lit(0.0))
-                    + F.lit(float(beta)),
-                )
-                .drop("c")
-            )
-            # cut lineage each round (K joins stacked would replan the whole
-            # history); eager so the previous iteration's blocks are done
-            x = x.localCheckpoint(eager=True)
+        x = iterate("katz", verts.withColumn("x", F.lit(float(beta))), step,
+                    range(1, iterations))
         return x.select("url", F.col("x").alias("katz"))
     finally:
         e.unpersist()

@@ -9,12 +9,65 @@ Spark shape per round: edges ⋈ labels on one side → groupBy(vertex, label)
 count → argmax via row_number over Window.partitionBy(vertex) — two shuffles,
 both on vertex keys; hub skew is bounded because the message table is
 (edge count) rows, and AQE skew-join splitting handles power-law vertices.
+The rounds run on plans/fixpoint.iterate; both operators share one vote
+kernel (``_vote``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.hits import BROADCAST_VERTEX_THRESHOLD, resolve_broadcast
+from pagerank_spark.plans.fixpoint import iterate
+
+
+def _adjacency(edges: DataFrame, num_partitions: int | None,
+               broadcast_labels: bool | None, broadcast_threshold: int | None):
+    """(both, vertices, broadcast): the distinct undirected neighbour pairs
+    (u, v), self-loops dropped, partitioned by v and persisted; the
+    persisted vertex set partitioned by url; and whether to broadcast the
+    label vector. The caller unpersists both frames."""
+    num_partitions = num_partitions or int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    both = (
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+        .repartition(num_partitions, "v")
+        .persist()
+    )
+    vertices = (
+        edges.select(F.col("src").alias("url"))
+        .union(edges.select(F.col("dst").alias("url")))
+        .distinct()
+        .repartition(num_partitions, "url")
+        .persist()
+    )
+    if broadcast_labels is None:  # only pay the count job when auto-deciding
+        broadcast_labels = resolve_broadcast(
+            None, vertices.count(), broadcast_threshold or BROADCAST_VERTEX_THRESHOLD
+        )
+    return both, vertices, broadcast_labels
+
+
+def _vote(both: DataFrame, labels: DataFrame, broadcast: bool) -> DataFrame:
+    """(url, _new): each vertex's most frequent label among its labelled
+    neighbours ``labels`` (url, label), ties to the SMALLEST label."""
+    lab_v = labels.select(F.col("url").alias("v"), "label")
+    if broadcast:
+        lab_v = F.broadcast(lab_v)
+    w = Window.partitionBy("u").orderBy(F.desc("_cnt"), F.asc("label"))
+    return (
+        both.join(lab_v, "v")
+        .groupBy("u", "label")
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select(F.col("u").alias("url"), F.col("label").alias("_new"))
+    )
 
 
 def label_propagation(
@@ -34,64 +87,29 @@ def label_propagation(
     (hits.resolve_broadcast, 10M vertices); set False at cluster scale so
     the join falls back to the co-partitioned shuffle path.
     """
-    from pagerank_spark.operators.hits import (
-        BROADCAST_VERTEX_THRESHOLD,
-        resolve_broadcast,
+    both, vertices, broadcast_labels = _adjacency(
+        edges, num_partitions, broadcast_labels, broadcast_threshold
     )
-    spark = edges.sparkSession
-    num_partitions = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    both = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(num_partitions, "v")
-        .persist()
-    )
-    vertices = (
-        edges.select(F.col("src").alias("url"))
-        .union(edges.select(F.col("dst").alias("url")))
-        .distinct()
-        .repartition(num_partitions, "url")
-        .persist()
-    )
-    labels = vertices.select("url", F.col("url").alias("label")).localCheckpoint(eager=True)
-    if broadcast_labels is None:  # only pay the count job when auto-deciding
-        broadcast_labels = resolve_broadcast(
-            None, vertices.count(), broadcast_threshold or BROADCAST_VERTEX_THRESHOLD
+
+    def step(labels: DataFrame, _k: int) -> DataFrame:
+        return labels.join(_vote(both, labels, broadcast_labels), "url", "left").select(
+            "url",
+            F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+            (~F.coalesce(F.col("_new") == F.col("label"), F.lit(True))).alias("_chg"),
         )
 
-    w = Window.partitionBy("u").orderBy(F.desc("_cnt"), F.asc("label"))
-    for _ in range(max_iterations):
-        lab_v = labels.select(F.col("url").alias("v"), "label")
-        if broadcast_labels:
-            lab_v = F.broadcast(lab_v)
-        msgs = both.join(lab_v, "v").select("u", "label")
-        best = (
-            msgs.groupBy("u", "label")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(F.col("u").alias("url"), F.col("label").alias("_new"))
-        )
-        new_labels = (
-            labels.join(best, "url", "left")
-            .select(
-                "url",
-                F.coalesce(F.col("_new"), F.col("label")).alias("label"),
-                (~F.coalesce(F.col("_new") == F.col("label"), F.lit(True))).alias("_chg"),
-            )
-        ).localCheckpoint(eager=False)
-        # ONE job per round: the max(_chg) aggregate materializes the lazy
-        # checkpoint and returns the convergence flag in the same action
-        changed = bool(
-            new_labels.agg(F.max(F.col("_chg").cast("int")).alias("m")).first()["m"]
-        )
-        old = labels
-        labels = new_labels.select("url", "label")
-        old.unpersist()
-        if stop_when_stable and not changed:
-            break
+    # when stopping on stability the round's one action is the max(_chg)
+    # aggregate; otherwise it is an eager checkpoint
+    labels = iterate(
+        "label_propagation",
+        vertices.select("url", F.col("url").alias("label")),
+        step, range(max_iterations),
+        stats=[F.max(F.col("_chg").cast("int")).alias("m")] if stop_when_stable else None,
+        project=lambda new, s, _k: (
+            new.select("url", "label"), {"changed": bool(s and s["m"])}
+        ),
+        stop=lambda r: stop_when_stable and not r["changed"],
+    )
     both.unpersist()
     vertices.unpersist()
     return labels
@@ -116,82 +134,28 @@ def seeded_label_propagation(
     ``iterations`` synchronous rounds — the spam/topic classifier spread
     next to TrustRank's rank-mass spread (operators/trust.py).
 
-    Scale shape per round: identical to label_propagation — the label
-    vector is vertex-sized, the message table edge-sized, both shuffles on
-    vertex keys, AQE handles hub skew; the seed clamp is one extra
-    vertex-sized left join folded into the same select. The seed table is
-    joined once up front (never per round).
+    Scale shape per round: identical to label_propagation (the same vote
+    kernel) — the label vector is vertex-sized, the message table
+    edge-sized, both shuffles on vertex keys, AQE handles hub skew; the seed
+    clamp is a coalesce in the same select. The seed table is joined once up
+    front (never per round).
     """
-    from pagerank_spark.operators.hits import (
-        BROADCAST_VERTEX_THRESHOLD,
-        resolve_broadcast,
-    )
-
-    spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    both = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(num_partitions, "v")
-        .persist()
-    )
-    vertices = (
-        edges.select(F.col("src").alias("url"))
-        .union(edges.select(F.col("dst").alias("url")))
-        .distinct()
-        .repartition(num_partitions, "url")
-    )
-    seed_tbl = (
-        seeds.select("url", F.col("label").alias("_seed"))
-        .repartition(num_partitions, "url")
+    both, vertices, broadcast_labels = _adjacency(
+        edges, num_partitions, broadcast_labels, broadcast_threshold
     )
     # (url, _seed, label) — _seed rides along so the clamp is a coalesce,
     # not a per-round join against the seed table
-    state = (
-        vertices.join(seed_tbl, "url", "left")
-        .select("url", "_seed", F.col("_seed").alias("label"))
-        .persist()
-    )
-    if broadcast_labels is None:
-        broadcast_labels = resolve_broadcast(
-            None, state.count(), broadcast_threshold or BROADCAST_VERTEX_THRESHOLD
-        )
-    else:
-        state.count()
+    state = vertices.join(
+        seeds.select("url", F.col("label").alias("_seed")), "url", "left"
+    ).select("url", "_seed", F.col("_seed").alias("label"))
 
-    w = Window.partitionBy("u").orderBy(F.desc("_cnt"), F.asc("label"))
-    for _ in range(iterations):
-        lab_v = state.where(F.col("label").isNotNull()).select(
-            F.col("url").alias("v"), "label"
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        voted = _vote(both, state.where(F.col("label").isNotNull()), broadcast_labels)
+        return state.join(voted, "url", "left").select(
+            "url", "_seed", F.coalesce("_seed", "_new", "label").alias("label")
         )
-        if broadcast_labels:
-            lab_v = F.broadcast(lab_v)
-        msgs = both.join(lab_v, "v").select("u", "label")
-        best = (
-            msgs.groupBy("u", "label")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(F.col("u").alias("url"), F.col("label").alias("_new"))
-        )
-        new_state = (
-            state.join(best, "url", "left")
-            .select(
-                "url",
-                "_seed",
-                F.coalesce("_seed", "_new", "label").alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        old = state
-        state = new_state
-        old.unpersist()
+
+    state = iterate("seeded_label_propagation", state, step, range(iterations))
     both.unpersist()
-    out = state.where(F.col("label").isNotNull()).select("url", "label")
-    out = out.localCheckpoint(eager=True)
-    state.unpersist()
-    return out
+    vertices.unpersist()
+    return state.where(F.col("label").isNotNull()).select("url", "label")

@@ -16,32 +16,32 @@ Scale design (SURVEY.md §4):
     checkpointed with the same partitioning on url, so the per-iteration
     edges-join-ranks is co-partitioned; the only unavoidable shuffle is the
     groupBy(dst) combine (map-side partial aggregation applies).
-  * all per-iteration scalars (dangling mass, norm, residual) come from ONE
-    fused aggregate action over the checkpointed new vector:
+  * the rounds run on plans/fixpoint.iterate: per iteration ONE action,
+    the fused stats aggregate over the new vector's lazy localCheckpoint,
+    gives every scalar (dangling mass, norm, residual):
         norm      = sqrt(sum(x_un^2))
         residual  = sqrt(max(0, 2 - 2*sum(x_un*x_prev)/norm))
                     (both x_un/norm and x_prev are unit vectors)
         dangling  = sum(x_un * is_dangling)/norm      (for the NEXT iteration)
-    That action also materializes the vector's lazy checkpoint. AQE runs
-    each query stage under it as its own Spark job: measured 5 jobs per
-    iteration on both backends (pinned in tests/test_plan_audits.py).
+    AQE runs that action as several Spark jobs: measured 5 per iteration on
+    both backends (pinned in tests/test_plan_audits.py).
   * one loop, power_iterate, serves both backends; a backend (SpMV) only
     supplies P'x — a join + aggregate here, block-local NumPy kernels in
     operators/pagerank_csr.py — plus its vertex key and partition layout.
-  * localCheckpoint each iteration truncates lineage (else the plan doubles
-    per iteration); persistent checkpointing to a directory (resumable, with
-    per-iteration manifests) lives in plans/checkpoint.py.
+  * durable checkpointing to a directory (resumable, with per-iteration
+    manifests, plans/checkpoint.py) is part of the post-round projection.
   * driver scalars enter the next plan as lit() — Catalyst constant-folds.
 """
 
 from __future__ import annotations
 
 import math
-import time
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import iterate, materialize
 
 
 def _init_state(graph, v_df: DataFrame | None, x0_df: DataFrame | None = None) -> DataFrame:
@@ -193,20 +193,18 @@ def power_iterate(
         x = spmv.layout(x)
     else:
         start_iter = 0
-        # ONE init job, same fusion as the loop body: the LAZY checkpoint
-        # materializes during the dangling-mass aggregate (eager checkpoint
-        # + agg was 2 jobs — at 9-iteration convergence runs the init jobs
-        # are a measurable slice of the fixed non-wall cost)
-        x = spmv.layout(_init_state(graph, v_df, x0_df)).localCheckpoint(eager=False)
-        # initial dangling mass: x0 . a
-        dangling_mass = x.agg(F.sum(F.col("rank") * F.col("dangling"))).first()[0] or 0.0
+        # initial dangling mass x0 . a, in the one action that materializes
+        # the initial state's lazy checkpoint
+        x, s = materialize(
+            spmv.layout(_init_state(graph, v_df, x0_df)),
+            [F.sum(F.col("rank") * F.col("dangling"))],
+        )
+        dangling_mass = s[0] or 0.0
 
     cols = list(dict.fromkeys(("url", spmv.key, "v", "dangling")))
-    prev_ck = x  # DataFrame whose blocks back the current x
-    for it in range(start_iter, max_iterations):
-        t0 = time.monotonic()
-        q = alpha * dangling_mass + (1.0 - alpha)
 
+    def step(x: DataFrame, it: int) -> DataFrame:
+        q = alpha * dangling_mass + (1.0 - alpha)
         # The merge hint pins the fold to a shuffle join of two vertex-sized
         # tables. Without it AQE sees the vertex-sized contribs stage and
         # converts to a per-iteration broadcast join — measured 2.3x slower
@@ -220,45 +218,31 @@ def power_iterate(
             ).alias("_xun"),
             F.col("rank").alias("_prev"),
         )
-        if spmv.relayout:
-            new = spmv.layout(new)
-        # ONE action per iteration: a LAZY localCheckpoint materializes during
-        # the fused stats aggregate below (vs eager checkpoint + agg = 2
-        # actions). Lineage still truncates at the checkpoint. (A
-        # persist()-chain variant deadlocks under AQE when the cached plan
-        # embeds the per-iteration broadcast exchange — do not revisit.)
-        new = new.localCheckpoint(eager=False)
+        return spmv.layout(new) if spmv.relayout else new
 
-        s = new.agg(
-            F.sum(F.col("_xun") * F.col("_xun")).alias("s2"),
-            F.sum(F.col("_xun") * F.col("_prev")).alias("sp"),
-            F.sum(F.col("_xun") * F.col("dangling")).alias("sd"),
-        ).first()
+    def project(new: DataFrame, s, it: int):
+        nonlocal dangling_mass
         norm = math.sqrt(s["s2"])
         residual = math.sqrt(max(0.0, 2.0 - 2.0 * s["sp"] / norm))
         dangling_mass = (s["sd"] or 0.0) / norm
-
         x = new.select(*cols, (F.col("_xun") / F.lit(norm)).alias("rank"))
-        if metrics is not None:
-            metrics.append(
-                {
-                    "iteration": it,
-                    "residual": residual,
-                    "norm": norm,
-                    "dangling_mass": dangling_mass,
-                    "wall_s": time.monotonic() - t0,
-                }
-            )
         if checkpointer is not None:
             state = x.select("url", "v", "dangling", "rank")
             saved = checkpointer.save(it, state, dangling_mass, residual)
             if saved is not state:
                 # continue from the durable copy (lineage + memory bounded)
                 x = spmv.layout(saved)
-        # free the previous iteration's checkpoint blocks
-        prev_ck.unpersist()
-        prev_ck = new
-        if residual < epsilon:
-            break
+        record = {"iteration": it, "residual": residual, "norm": norm,
+                  "dangling_mass": dangling_mass}
+        return x, record
 
+    x = iterate(
+        "pagerank", x, step, range(start_iter, max_iterations),
+        stats=[
+            F.sum(F.col("_xun") * F.col("_xun")).alias("s2"),
+            F.sum(F.col("_xun") * F.col("_prev")).alias("sp"),
+            F.sum(F.col("_xun") * F.col("dangling")).alias("sd"),
+        ],
+        project=project, stop=lambda r: r["residual"] < epsilon, metrics=metrics,
+    )
     return x.select("url", "rank")

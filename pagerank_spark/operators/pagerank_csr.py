@@ -46,9 +46,9 @@ Design — why this shape survives scale:
     via one searchsorted per block, contribs = weight * x[sid], segment-sum
     by dst code with np.bincount (true vectorized segment-sum), then one JVM
     aggregation combines partial sums across blocks. The loop itself —
-    fold join, lazy localCheckpoint, fused stats action, checkpoint/resume —
-    is operators/pagerank.power_iterate, shared with v1; this module is its
-    SpMV backend (_csr_spmv).
+    fold join, fused stats action, checkpoint/resume — is
+    operators/pagerank.power_iterate on plans/fixpoint.iterate, shared with
+    v1; this module is its SpMV backend (_csr_spmv).
   * the plan is pinned per-query, not via session conf: the contribs
     aggregation rides an explicit repartition(B, 'vid') (AQE preserves
     user-specified partition counts) and the contribs fold is hinted

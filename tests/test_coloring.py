@@ -17,7 +17,7 @@ def _pri(u: str) -> int:
 def _py_jp(edges):
     # speculative coloring replay: every uncolored vertex picks its mex
     # over COLORED neighbors; same-pick adjacent conflicts lose to the
-    # smaller md5 priority and retry next round
+    # smaller (md5 priority, url) and retry next round
     und = {tuple(sorted(e)) for e in edges if e[0] != e[1]}
     nbr: dict[str, set[str]] = {}
     for a, b in und:
@@ -37,7 +37,7 @@ def _py_jp(edges):
             v: c
             for v, c in picks.items()
             if not any(
-                u in picks and picks[u] == c and _pri(u) < _pri(v)
+                u in picks and picks[u] == c and (_pri(u), u) < (_pri(v), v)
                 for u in nbr[v]
             )
         }
@@ -101,3 +101,18 @@ def test_max_rounds_raises(spark):
                                ["src", "dst"])
     with pytest.raises(RuntimeError):
         greedy_coloring(df, max_rounds=0)
+
+
+def test_priority_tie_is_broken_by_url(spark, monkeypatch):
+    # every vertex ties on the 60-bit priority: the url must break the tie,
+    # else two same-pick neighbors both keep their color
+    from pyspark.sql import functions as F
+
+    from pagerank_spark.operators import coloring
+
+    monkeypatch.setattr(coloring, "hexint15", lambda col: F.lit(7).cast("long"))
+    vs = [f"t{i}" for i in range(6)]
+    edges = [(a, b) for a in vs for b in vs if a < b and (ord(a[1]) + ord(b[1])) % 3]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    got = {r["url"]: r["color"] for r in coloring.greedy_coloring(df).collect()}
+    _check_proper(edges, got)

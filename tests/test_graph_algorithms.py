@@ -36,6 +36,14 @@ def test_connected_components_exact(spark, edges):
     assert got == want
 
 
+def test_connected_components_raises_when_rounds_run_out(spark):
+    # a path still contracts after one round: a partial contraction would
+    # return wrong labels, so the operator raises instead
+    path = [(f"p{i}", f"p{i + 1}") for i in range(8)]
+    with pytest.raises(RuntimeError, match="connected_components"):
+        connected_components(_edges_df(spark, path), max_iterations=1)
+
+
 @pytest.mark.parametrize("edges", [HAND_EDGES, synth_edges(40, 100, seed=21)], ids=["hand", "synth21"])
 @pytest.mark.parametrize("rounds", [1, 3])
 def test_label_propagation_exact(spark, edges, rounds):

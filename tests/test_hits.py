@@ -107,10 +107,11 @@ def test_hits_one_action_per_half_round(edges_df, monkeypatch):
     monkeypatch.setattr(DataFrame, "localCheckpoint", counting_ck)
     metrics = []
     hits(edges_df, iterations=3, metrics=metrics)
-    # 2 half-rounds x 3 iterations, one .first() each; the ONLY eager
-    # checkpoint is the final assembly
+    # 2 half-rounds x 3 iterations, one .first() each; no eager
+    # checkpoint at all — the result is a projection over the last
+    # half-round's checkpoint
     assert calls["first"] == 6
-    assert calls["eager_ck"] == 1
+    assert calls["eager_ck"] == 0
     assert len(metrics) == 6
     assert all(m["norm"] > 0 for m in metrics)
 

@@ -166,6 +166,73 @@ def test_pagerank_job_budget(spark, golden_graph, method, max_overhead):
     assert jobs[2] - 2 * per_iter <= max_overhead, jobs
 
 
+def _round_budget_cases():
+    from pagerank_spark.operators.components import connected_components
+    from pagerank_spark.operators.eigencentrality import eigenvector_centrality
+    from pagerank_spark.operators.hits import hits
+    from pagerank_spark.operators.katz import katz_centrality
+    from pagerank_spark.operators.labelprop import (
+        label_propagation,
+        seeded_label_propagation,
+    )
+
+    def components(g, k):
+        # the 64-vertex path is still contracting after 4 rounds: the
+        # operator raises, after running exactly k rounds
+        with pytest.raises(RuntimeError):
+            connected_components(g["path"], max_iterations=k)
+
+    # (name, run(graphs, rounds), budget): jobs per round at most the
+    # budget; the job counts before the change were components 9, both
+    # labelprop modes 7, seeded 6, katz 4, eigenvector 9, hits 6.5 per
+    # half-round
+    return [
+        pytest.param("components", components, 9, id="components"),
+        # disjoint pairs swap labels every round, so both stop modes run k
+        pytest.param("labelprop_stop", lambda g, k: label_propagation(
+            g["pairs"], max_iterations=k).count(), 7, id="labelprop_stop"),
+        pytest.param("labelprop_fixed", lambda g, k: label_propagation(
+            g["pairs"], max_iterations=k, stop_when_stable=False).count(), 6,
+            id="labelprop_fixed"),
+        pytest.param("seeded_labelprop", lambda g, k: seeded_label_propagation(
+            g["path"], g["seeds"], iterations=k).count(), 6, id="seeded_labelprop"),
+        pytest.param("katz", lambda g, k: katz_centrality(
+            g["path"], iterations=k + 1).count(), 4, id="katz"),
+        pytest.param("eigenvector", lambda g, k: eigenvector_centrality(
+            g["path"], iterations=k).count(), 5, id="eigenvector"),
+        # k half-rounds
+        pytest.param("hits", lambda g, k: hits(
+            g["path"], iterations=k // 2).count(), 6, id="hits"),
+    ]
+
+
+@pytest.mark.parametrize("name,run,budget", _round_budget_cases())
+def test_fixpoint_round_job_budget(spark, name, run, budget):
+    # every operator on plans/fixpoint.iterate pays one action per round;
+    # under AQE that action's jobs per round are pinned here, measured as
+    # the job difference between a 2- and a 4-round run in one job group
+    sc = spark.sparkContext
+    graphs = {
+        "path": spark.createDataFrame(
+            [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(63)], ["src", "dst"]
+        ).localCheckpoint(),
+        "pairs": spark.createDataFrame(
+            [(f"a{i}", f"b{i}") for i in range(8)], ["src", "dst"]
+        ).localCheckpoint(),
+        "seeds": spark.createDataFrame([("p000", "x"), ("p040", "y")], ["url", "label"]),
+    }
+    jobs = {}
+    for k in (2, 4):
+        group = f"round-budget-{name}-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            run(graphs, k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert (jobs[4] - jobs[2]) / 2 <= budget, jobs
+
+
 def test_bucketed_edge_table_join_and_agg_are_exchange_free(spark, tmp_path):
     # the co-location contract: a bucketed+sorted edge table joins on its
     # bucket key and aggregates by it without any Exchange — at 100 TB that
@@ -271,12 +338,10 @@ def test_hits_join_strategy_flips_with_input_size(spark, n_vertices, expect_broa
             [(f"u{i}", f"u{(i * 3) % 7}") for i in range(20)], ["src", "dst"]
         )
         verts = e.select(F.col("src").alias("url")).distinct()
-        scores = verts.withColumn("h", F.lit(1.0))
+        state = verts.select("url", F.lit(0.0).alias("a"), F.lit(1.0).alias("h"))
         broadcast = resolve_broadcast(None, n_vertices)
         assert broadcast == expect_broadcast
-        plan = _physical(
-            _half_round(e, scores, verts, "src", "dst", "h", "a", broadcast)
-        )
+        plan = _physical(_half_round(e, state, "a", broadcast))
         assert ("BroadcastHashJoin" in plan) == expect_broadcast, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
