@@ -6750,10 +6750,11 @@ FROM sh JOIN dfq USING (sh) GROUP BY doc_id
 """
 
     # deterministic Luby MIS: recursive survivor set (a vertex survives a
-    # round iff it neither wins — beats every remaining neighbor's md5
-    # priority — nor touches a winner), winners recovered per level —
-    # see operators/mis.py
-    _p = HEX15.format
+    # round iff it neither wins — beats every remaining neighbor's
+    # (md5 priority, url) — nor touches a winner), winners recovered per
+    # level — see operators/mis.py
+    def _p(x: str) -> str:
+        return f"({HEX15.format(x=x)}, {x})"
     sqls["mis"] = f"""
 WITH RECURSIVE g AS ({G_SQL}),
 und AS (

@@ -29,16 +29,20 @@ pure function both engines recompute inline — no priority table ever
 shuffles, and the DuckDB twin replays the identical synchronous rounds.
 A 60-bit tie between neighbors (~2^-60/pair) is broken by the url, so
 (priority, url) is a total order: of two same-pick neighbors exactly one
-retries, and the coloring stays proper. ``max_rounds`` + the no-progress
-check still raise instead of looping.
+retries, the coloring stays proper, and the uncolored vertex first in that
+order always keeps its pick, so every round makes progress;
+``max_rounds`` still raises instead of looping.
 
-Scale shape per round: ONE vertex-sized state table (the scc/kcore
-cadence — one eager localCheckpoint + one count per round, plus one for
-the shared picks table); the mex is a collect_set over colored
+Scale shape per round: ONE vertex-sized (url, color) state frame on
+plans/fixpoint.iterate — the round's one action is the uncolored count
+over its lazy localCheckpoint, plus one eager checkpoint of the picks
+table that the round reads twice; the mex is a collect_set over colored
 neighbors whose per-vertex payload is bounded by chi <= Delta+1
 DISTINCT colors (a 10^7-degree hub holds a handful of colors, not 10^7
 rows), and conflict detection is one adjacency join against the
-(vertex-sized, materialized) picks table.
+(vertex-sized, materialized) picks table. The vertex-sized sides of the
+adjacency joins broadcast under kcore._broadcaster's vertex-count policy,
+so the joins leave the adjacency in place.
 """
 
 from __future__ import annotations
@@ -46,7 +50,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.kcore import _broadcaster, _undirect
 from pagerank_spark.operators.textops import hexint15
+from pagerank_spark.plans.fixpoint import iterate, materialize
 
 
 def _priority(col: str):
@@ -67,68 +73,50 @@ def greedy_coloring(
     Delta+1 of them), deterministic across partitionings and engines.
     ``extra_vertices`` adds isolated vertices (no neighbors — their
     round-1 pick 0 always survives)."""
-    s, d = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.where(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    verts = und.select(F.col("a").alias("url")).union(
-        und.select(F.col("b").alias("url"))
-    )
-    if extra_vertices is not None:
-        verts = verts.union(extra_vertices.select("url"))
-    state = (
-        verts.distinct()
-        .select("url", F.lit(None).cast("int").alias("color"))
-        .localCheckpoint(eager=True)
-    )
+    _, adj, verts = _undirect(edges, src_col, dst_col, extra_vertices)
     adj = adj.localCheckpoint(eager=True)
-    n_unc = state.where(F.col("color").isNull()).count()
+    uncolored = [F.count_if(F.col("color").isNull()).alias("n")]
+    state, row = materialize(
+        verts.select("url", F.lit(None).cast("int").alias("color")), uncolored
+    )
+    bc = _broadcaster(row["n"])
     mex = F.expr("filter(sequence(0, size(_cs)), x -> NOT array_contains(_cs, x))[0]")
-    rounds = 0
-    while n_unc > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"greedy_coloring did not finish in {max_rounds} rounds"
-            )
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
         unc = state.where(F.col("color").isNull()).select("url")
         # speculative pick: mex over the COLORED neighborhood, for every
         # uncolored vertex at once
         cs = (
-            adj.join(unc.withColumnRenamed("url", "u"), "u", "left_semi")
+            adj.join(bc(unc.withColumnRenamed("url", "u")), "u", "left_semi")
             .join(
-                state.where(F.col("color").isNotNull())
-                .select(F.col("url").alias("v"), "color"),
+                bc(
+                    state.where(F.col("color").isNotNull())
+                    .select(F.col("url").alias("v"), "color")
+                ),
                 "v",
             )
             .groupBy("u")
             .agg(F.collect_set("color").alias("_cs"))
         )
-        picks = (
-            unc.join(cs.withColumnRenamed("u", "url"), "url", "left")
-            .select(
+        picks, _ = materialize(  # read twice: conflict probe + merge
+            unc.join(cs.withColumnRenamed("u", "url"), "url", "left").select(
                 "url",
                 F.when(F.col("_cs").isNull(), F.lit(0))
                 .otherwise(mex)
                 .cast("int")
                 .alias("_pick"),
-            )
-            .localCheckpoint(eager=True)  # read twice: conflict probe + merge
+            ),
+            None,
         )
         # conflict: an adjacent same-round same-pick neighbor with smaller
         # (priority, url) wins; the loser drops its pick and retries
         losers = (
             adj.join(
-                picks.select(F.col("url").alias("u"), F.col("_pick").alias("_pu")),
+                bc(picks.select(F.col("url").alias("u"), F.col("_pick").alias("_pu"))),
                 "u",
             )
             .join(
-                picks.select(F.col("url").alias("v"), F.col("_pick").alias("_pv")),
+                bc(picks.select(F.col("url").alias("v"), F.col("_pick").alias("_pv"))),
                 "v",
             )
             .where(
@@ -139,20 +127,12 @@ def greedy_coloring(
             .distinct()
         )
         keeps = picks.join(losers, "url", "left_anti")
-        nxt = (
-            state.join(keeps, "url", "left")
-            .select(
-                "url",
-                F.coalesce(F.col("color"), F.col("_pick")).alias("color"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(keeps, "url", "left").select(
+            "url", F.coalesce(F.col("color"), F.col("_pick")).alias("color")
         )
-        n_nxt = nxt.where(F.col("color").isNull()).count()
-        state.unpersist()
-        picks.unpersist()
-        state = nxt
-        if n_nxt >= n_unc:
-            raise RuntimeError("greedy_coloring stalled (no vertex kept its pick)")
-        n_unc = n_nxt
-    adj.unpersist()
-    return state.select("url", "color")
+
+    return iterate(
+        "greedy_coloring", state, step, range(max_rounds), stats=uncolored,
+        project=lambda state, row, _k: (state, {"uncolored": row["n"]}),
+        stop=lambda r: r["uncolored"] == 0, strict=True,
+    )

@@ -15,10 +15,11 @@ Layout: FEATURE-DIMENSION-PARALLEL — the state is the exploded
 and a 10^7-degree hub never materializes a per-row array buffer. Per
 round: ONE src-keyed equi-join of the state against the distinct edge
 table, a partial-aggregated (dst, dim) mean (map-side combine), and one
-left join back to the state — shuffle volume O(E*d). For very wide
-features the CSR-blocked array path (operators/pagerank_csr.py) is the
-alternative; the exploded form is the one that composes with plain
-DataFrame ops and the DuckDB twin.
+left join back to the state — shuffle volume O(E*d). The rounds run on
+plans/fixpoint.iterate; each round's one action is its eager
+localCheckpoint. For very wide features the CSR-blocked array path
+(operators/pagerank_csr.py) is the alternative; the exploded form is the
+one that composes with plain DataFrame ops and the DuckDB twin.
 
 Cross-engine bit-stability (the katz/eigenvector recipe): the state is
 9dp-quantized every round, the neighbor sum runs in DECIMAL(38,9)
@@ -36,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import iterate
 
 
 def feature_propagation(
@@ -88,31 +91,30 @@ def feature_propagation(
         hexint15(F.col("url")).alias("vid"), "dim", "x"
     ).localCheckpoint(eager=True)
     keep = float(1.0 - lam)
+
+    def step(x: DataFrame, _k: int) -> DataFrame:
+        contrib = (
+            e.join(x.withColumnRenamed("vid", "s"), "s")
+            .groupBy(F.col("d").alias("vid"), "dim")
+            .agg(
+                (
+                    F.sum(F.col("x").cast("decimal(38,9)")).cast("double")
+                    / F.count(F.lit(1))
+                ).alias("_m")
+            )
+        )
+        return x.join(contrib, ["vid", "dim"], "left").select(
+            "vid",
+            "dim",
+            F.round(
+                F.lit(keep) * F.col("x")
+                + F.lit(float(lam)) * F.coalesce(F.col("_m"), F.lit(0.0)),
+                9,
+            ).alias("x"),
+        )
+
     try:
-        for _ in range(rounds):
-            contrib = (
-                e.join(x.withColumnRenamed("vid", "s"), "s")
-                .groupBy(F.col("d").alias("vid"), "dim")
-                .agg(
-                    (
-                        F.sum(F.col("x").cast("decimal(38,9)")).cast("double")
-                        / F.count(F.lit(1))
-                    ).alias("_m")
-                )
-            )
-            x = (
-                x.join(contrib, ["vid", "dim"], "left")
-                .select(
-                    "vid",
-                    "dim",
-                    F.round(
-                        F.lit(keep) * F.col("x")
-                        + F.lit(float(lam)) * F.coalesce(F.col("_m"), F.lit(0.0)),
-                        9,
-                    ).alias("x"),
-                )
-                .localCheckpoint(eager=True)
-            )
+        x = iterate("feature_propagation", x, step, range(rounds))
         return spine.join(x, "vid").select("url", "dim", "x")
     finally:
         e.unpersist()

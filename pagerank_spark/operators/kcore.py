@@ -12,12 +12,16 @@ Scale shape per round: ONE partial-aggregated degree count over the
 (deduplicated, undirected) edge list + two semi-joins against the surviving
 vertex set — the vertex side is degree-filtered and broadcasts while it
 fits, the edge side stays partitioned in place. Rounds are O(peeling
-depth), typically tens; each round's edge set is localCheckpoint-ed so
-lineage stays flat. The DuckDB twin replicates the peeling fixpoint as a
-recursive CTE with the same stop rule.
+depth), typically tens, and run on plans/fixpoint.iterate (``_peel``, shared
+with k_truss): each round's one action is the surviving-edge count over
+the round's lazy localCheckpoint. The DuckDB twin replicates the peeling
+fixpoint as a recursive CTE with the same stop rule.
 """
 
 from __future__ import annotations
+
+import sys
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,14 +30,71 @@ from pagerank_spark.operators.hits import (
     BROADCAST_VERTEX_THRESHOLD,
     resolve_broadcast,
 )
+from pagerank_spark.plans.fixpoint import iterate, materialize
 
 
-def _undirect(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+def _undirect(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    extra_vertices: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The simple undirected graph underlying ``edges`` (self-loops
+    dropped, multi-edges collapsed) as ``(und, adj, verts)``: ``und`` the
+    (a, b) edges with a < b, ``adj`` both directions as (u, v) rows, and
+    ``verts`` the (url,) vertex set plus ``extra_vertices``. All lazy."""
     s, d = F.col(src_col), F.col(dst_col)
-    return (
+    und = (
         edges.where(s != d)
         .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
         .distinct()
+    )
+    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+    verts = adj.select(F.col("u").alias("url"))
+    if extra_vertices is not None:
+        verts = verts.union(extra_vertices.select("url"))
+    return und, adj, verts.distinct()
+
+
+def _broadcaster(
+    n_vertices: int,
+    flag: bool | None = None,
+    threshold: int = BROADCAST_VERTEX_THRESHOLD,
+) -> Callable[[DataFrame], DataFrame]:
+    """``F.broadcast`` for vertex-sized join sides under resolve_broadcast's
+    count policy, else the identity: a checkpointed frame carries no size
+    statistics, so Spark does not choose those broadcasts by itself."""
+    return F.broadcast if resolve_broadcast(flag, n_vertices, threshold) else (lambda df: df)
+
+
+def _rounds(max_rounds: int | None) -> range:
+    """``max_rounds`` rounds; None = until the fixpoint."""
+    return range(sys.maxsize if max_rounds is None else max_rounds)
+
+
+def _peel(
+    op: str,
+    und: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int | None,
+) -> DataFrame:
+    """Run ``step(edges, n_edges)`` on the (a, b) edge set until a round
+    removes no edge or none is left; ``max_rounds`` raises instead of
+    returning a partial peel (the scc convention)."""
+    n_edges = [F.count(F.lit(1)).alias("n")]
+    cur, row = materialize(und, n_edges)
+    n = row["n"]
+
+    def project(nxt: DataFrame, row, _k: int):
+        nonlocal n
+        done, n = row["n"] in (0, n), row["n"]
+        return nxt, {"done": done}
+
+    return iterate(
+        op, cur, lambda cur, _k: step(cur, n), _rounds(max_rounds),
+        stats=n_edges, project=project, stop=lambda r: r["done"], strict=True,
     )
 
 
@@ -65,36 +126,22 @@ def k_core(
     (pagerank.py:120-124's count-threshold rule, via resolve_broadcast)."""
     if k < 1:
         raise ValueError("k_core needs k >= 1")
-    cur = _undirect(edges, src_col, dst_col).localCheckpoint(eager=True)
-    n_cur = cur.count()
-    rounds = 0
-    while n_cur > 0:
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            raise RuntimeError(f"k_core did not stabilize in {max_rounds} rounds")
-        maybe_bc = (
-            F.broadcast
-            if resolve_broadcast(broadcast_vertices, 2 * n_cur, broadcast_threshold)
-            else (lambda df: df)
-        )
+
+    def step(cur: DataFrame, n_edges: int) -> DataFrame:
         deg = (
             cur.select(F.col("a").alias("v"))
             .unionAll(cur.select(F.col("b").alias("v")))
             .groupBy("v")
             .agg(F.count("*").alias("_d"))
         )
-        good = maybe_bc(deg.where(F.col("_d") >= k).select("v"))
-        nxt = (
-            cur.join(good.withColumnRenamed("v", "a"), "a", "left_semi")
-            .join(good.withColumnRenamed("v", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
+        good = _broadcaster(2 * n_edges, broadcast_vertices, broadcast_threshold)(
+            deg.where(F.col("_d") >= k).select("v")
         )
-        n_nxt = nxt.count()
-        cur.unpersist()
-        cur = nxt
-        if n_nxt == n_cur:  # stable: every remaining endpoint has deg >= k
-            break
-        n_cur = n_nxt
+        return cur.join(good.withColumnRenamed("v", "a"), "a", "left_semi").join(
+            good.withColumnRenamed("v", "b"), "b", "left_semi"
+        )
+
+    cur = _peel("k_core", _undirect(edges, src_col, dst_col)[0], step, max_rounds)
     return (
         cur.select(F.col("a").alias("url"))
         .union(cur.select(F.col("b").alias("url")))
@@ -126,110 +173,63 @@ def core_numbers(
     contributes a handful of histogram rows instead of a 10^7-element
     sorted buffer. H-index from the histogram: with cum(x) = #neighbors
     whose value >= x (a running sum over the descending distinct values),
-    H = max_x min(x, cum(x)) — exact integers end to end. The stop rule
-    (no vertex changed) is one 1-row aggregate per round; rounds are
-    bounded by the graph's "h-index convergence depth" (tens on web
-    graphs). ``max_rounds`` raises instead of returning partial values
-    (the scc convention).
+    H = max_x min(x, cum(x)) — exact integers end to end.
+
+    The state is ONE (v, c, chg) frame on plans/fixpoint.iterate. FRONTIER
+    rounds: v's h-index depends only on its neighbors' values, so after
+    the first sweep only the neighbors of a ``chg`` vertex are recomputed
+    — the long convergence tail (~60 of 72 rounds on the 1M-edge sf0.1
+    bench graph) touches frontier-sized slices. The round's one action is
+    the stop statistic sum(chg); rounds are bounded by the graph's
+    "h-index convergence depth" (tens on web graphs). Vertex-sized join
+    sides broadcast under resolve_broadcast's vertex-count policy
+    (``_broadcaster``). ``max_rounds`` raises instead of returning partial
+    values (the scc convention).
 
     The reference has no graph layer beyond PageRank (reference
     pagerank.py); coreness joins k_core / k_truss as the density
     backbone's per-vertex strength signal.
     """
-    und = _undirect(edges, src_col, dst_col)
-    adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
-    )
-    cur = (
-        adj.groupBy("v")
+    adj = _undirect(edges, src_col, dst_col)[1].localCheckpoint(eager=True)
+    changed = [F.count_if("chg").alias("changed")]
+    x, row = materialize(
+        adj.groupBy(F.col("u").alias("v"))
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .withColumn("chg", F.lit(True)),
+        [F.count(F.lit(1)).alias("n")],
     )
+    bc = _broadcaster(row["n"])
     w = (
-        Window.partitionBy("v")
+        Window.partitionBy("u")
         .orderBy(F.desc("x"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # FRONTIER iteration: v's h-index depends only on its NEIGHBORS'
-    # values, so after the first sweep only vertices adjacent to a
-    # just-changed vertex can move — late rounds (the long convergence
-    # tail, ~60 of 72 rounds on the 1M-edge sf0.1 bench graph) touch
-    # frontier-sized slices instead of the whole graph. Per-round state
-    # is materialized through a parquet SCRATCH ROUNDTRIP, not
-    # localCheckpoint: this loop runs to ~70+ rounds and a
-    # localCheckpoint chain was measured degrading geometrically past
-    # ~18 rounds (1.3 s -> 110 s/round, flat plans, constant
-    # partitions — session-state accumulation); the write/read reset
-    # stays at ~1.2 s/round indefinitely (measured total: 248 s
-    # non-frontier lcp -> 102 s frontier+scratch).
-    import shutil
-    import tempfile
 
-    spark = edges.sparkSession
-    scratch = tempfile.mkdtemp(prefix="core_numbers_")
+    def step(x: DataFrame, k: int) -> DataFrame:
+        cand_adj = adj
+        if k:  # (u, v) rows of every u next to a vertex v that changed
+            frontier = bc(x.where("chg").select("v"))
+            cand = adj.join(frontier, "v", "left_semi").select("u").distinct()
+            cand_adj = adj.join(bc(cand), "u", "left_semi")
+        hist = (
+            cand_adj.join(bc(x.select("v", F.col("c").alias("x"))), "v")
+            .groupBy("u", "x")
+            .agg(F.count("*").alias("_cnt"))
+        )
+        newh = (
+            hist.withColumn("_cum", F.sum("_cnt").over(w))
+            .groupBy(F.col("u").alias("v"))
+            .agg(F.max(F.least(F.col("x"), F.col("_cum"))).cast("long").alias("_h"))
+        )
+        return x.join(bc(newh), "v", "left").select(
+            "v",
+            F.coalesce(F.col("_h"), F.col("c")).alias("c"),
+            F.coalesce(F.col("_h") != F.col("c"), F.lit(False)).alias("chg"),
+        )
 
-    def _mat(df: DataFrame, name: str) -> DataFrame:
-        p = f"{scratch}/{name}"
-        df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    changed = None  # None = first round, recompute everyone
-    rounds = 0
-    try:
-        while True:
-            rounds += 1
-            if max_rounds is not None and rounds > max_rounds:
-                raise RuntimeError(
-                    f"core_numbers did not converge in {max_rounds} rounds"
-                )
-            if changed is None:
-                cand_adj = adj
-            else:
-                cand = (
-                    adj.join(
-                        changed.withColumnRenamed("v", "u"), "u", "left_semi"
-                    )
-                    .select("v")
-                    .distinct()
-                )
-                cand_adj = adj.join(cand, "v", "left_semi")
-            hist = (
-                cand_adj.join(
-                    cur.select(F.col("v").alias("u"), F.col("c").alias("x")), "u"
-                )
-                .groupBy("v", "x")
-                .agg(F.count("*").alias("_cnt"))
-            )
-            newh = (
-                hist.withColumn("_cum", F.sum("_cnt").over(w))
-                .groupBy("v")
-                .agg(
-                    F.max(F.least(F.col("x"), F.col("_cum")))
-                    .cast("long")
-                    .alias("_h")
-                )
-            )
-            new_changed = _mat(
-                newh.join(cur, "v")
-                .where(F.col("_h") != F.col("c"))
-                .select("v", F.col("_h")),
-                f"chg{rounds % 2}",
-            )
-            if new_changed.count() == 0:
-                break
-            cur = _mat(
-                cur.join(new_changed, "v", "left").select(
-                    "v", F.coalesce(F.col("_h"), F.col("c")).alias("c")
-                ),
-                f"cur{rounds % 2}",
-            )
-            changed = new_changed.select("v")
-        # the returned frame must outlive the scratch dir
-        out = cur.select(F.col("v").alias("url"), F.col("c").alias("core"))
-        out = out.localCheckpoint(eager=True)
-    finally:
-        adj.unpersist()
-        shutil.rmtree(scratch, ignore_errors=True)
-    return out
+    x = iterate(
+        "core_numbers", x, step, _rounds(max_rounds), stats=changed,
+        project=lambda x, row, _k: (x, {"changed": row["changed"]}),
+        stop=lambda r: r["changed"] == 0, strict=True,
+    )
+    return x.select(F.col("v").alias("url"), F.col("c").alias("core"))

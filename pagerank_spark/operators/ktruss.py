@@ -15,11 +15,11 @@ Scale shape per round: one degree-ordered triangle enumeration over the
 surviving edge set (Suri-Vassilvitskii orientation — the same wedge-join
 bound as operators/triangles.py, hub out-degree capped at O(sqrt m)), one
 edge-keyed partial-aggregated support count, one left join + filter.
-Rounds are O(peeling depth); each round's edge set is localCheckpoint-ed
-so lineage stays flat. The only driver action per round is the stop-rule
-count (the k_core pattern). The DuckDB twin replicates the fixpoint as a
-recursive CTE whose per-edge support is a correlated common-neighbor
-count.
+Rounds are O(peeling depth) and run on k_core's peel loop
+(kcore._peel over plans/fixpoint.iterate): each round's one action is the
+surviving-edge count over the round's lazy localCheckpoint. The DuckDB
+twin replicates the fixpoint as a recursive CTE whose per-edge support is
+a correlated common-neighbor count.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.kcore import _undirect
+from pagerank_spark.operators.kcore import _peel, _undirect
 
 
 def _edge_support(cur: DataFrame) -> DataFrame:
@@ -90,24 +90,12 @@ def k_truss(
     (the scc.py convention: raise, never return partial results)."""
     if k < 3:
         raise ValueError("k_truss needs k >= 3 (a 2-truss is every edge)")
-    cur = _undirect(edges, src_col, dst_col).localCheckpoint(eager=True)
-    n_cur = cur.count()
-    rounds = 0
-    while n_cur > 0:
-        rounds += 1
-        if max_rounds is not None and rounds > max_rounds:
-            raise RuntimeError(f"k_truss did not stabilize in {max_rounds} rounds")
-        sup = _edge_support(cur)
-        nxt = (
-            cur.join(sup, ["a", "b"], "left")
+
+    def step(cur: DataFrame, _n: int) -> DataFrame:
+        return (
+            cur.join(_edge_support(cur), ["a", "b"], "left")
             .where(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        n_nxt = nxt.count()
-        cur.unpersist()
-        cur = nxt
-        if n_nxt == n_cur:  # stable: every surviving edge has support >= k-2
-            break
-        n_cur = n_nxt
-    return cur
+
+    return _peel("k_truss", _undirect(edges, src_col, dst_col)[0], step, max_rounds)

@@ -12,17 +12,23 @@ roots for link_distance), and conflict-free scheduling all reduce to it.
 Determinism: priority = the 60-bit md5 of the url (textops.hexint15 — a
 pure function of the vertex name, so NO priority table is ever joined or
 shuffled; both engines recompute it inline). A priority tie between
-neighbors (~2^-60 per pair, the same collision budget the minhash/simhash
-operators accept) could stall a round; the ``max_rounds`` cap raises
-instead of looping.
+neighbors (~2^-60 per pair) is broken by the url, so (priority, url) is a
+total order: of two tied neighbors exactly one can win, and the round
+always admits the remaining vertex first in that order. The
+``max_rounds`` cap still raises instead of looping.
 
 Scale shape per round: two semi-joins restrict the static adjacency to the
 surviving vertex set, ONE partial-aggregated min per vertex (edge→vertex
-shuffle carrying an 8-byte priority), and vertex-sized anti-joins. Rounds
+shuffle carrying the (priority, url) key), and vertex-sized anti-joins. Rounds
 are O(log n) w.h.p. — each round removes the closed neighborhood of every
 local-minimum vertex, and any remaining component's global minimum always
-wins, so progress is guaranteed. Surviving state is localCheckpoint-ed per
-round (flat lineage, ContextCleaner-owned blocks).
+wins, so progress is guaranteed. The state is ONE (url, won) frame on
+plans/fixpoint.iterate — remaining vertices carry a NULL ``won``, winners
+TRUE, and a winner's neighbors leave it; the round's one action is the
+remaining count over its lazy localCheckpoint, plus one eager checkpoint
+of the winners table that the round reads twice. The vertex-sized sides
+of the adjacency joins broadcast under kcore._broadcaster's vertex-count
+policy, so the joins leave the adjacency in place.
 """
 
 from __future__ import annotations
@@ -30,7 +36,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.kcore import _broadcaster, _undirect
 from pagerank_spark.operators.textops import hexint15
+from pagerank_spark.plans.fixpoint import iterate, materialize
+
+
+def _priority(col: str):
+    """(60-bit md5 priority, url): a total order, so a tie has one winner."""
+    return F.struct(hexint15(F.col(col)).alias("p"), F.col(col).alias("url"))
 
 
 def maximal_independent_set(
@@ -48,63 +61,42 @@ def maximal_independent_set(
     vertices not present in the edge list — isolated vertices are always
     in the MIS (they win their first round unopposed).
     """
-    s, d = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.where(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    verts = und.select(F.col("a").alias("url")).union(
-        und.select(F.col("b").alias("url"))
-    )
-    if extra_vertices is not None:
-        verts = verts.union(extra_vertices.select("url"))
-    remaining = verts.distinct().localCheckpoint(eager=True)
+    _, adj, verts = _undirect(edges, src_col, dst_col, extra_vertices)
     adj = adj.localCheckpoint(eager=True)
-    n_rem = remaining.count()
-    spark = edges.sparkSession
-    mis = spark.createDataFrame([], "url string")
-    rounds = 0
-    while n_rem > 0:
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"maximal_independent_set did not finish in {max_rounds} rounds "
-                "(a 60-bit priority tie between neighbors can stall a round)"
-            )
+    remaining = [F.count_if(F.col("won").isNull()).alias("n")]
+    state, row = materialize(
+        verts.select("url", F.lit(None).cast("boolean").alias("won")), remaining
+    )
+    bc = _broadcaster(row["n"])
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        rem = state.where(F.col("won").isNull()).select("url")
         cur_adj = adj.join(
-            remaining.withColumnRenamed("url", "u"), "u", "left_semi"
-        ).join(remaining.withColumnRenamed("url", "v"), "v", "left_semi")
-        # min neighbor priority per surviving vertex — priority is a pure
-        # function of the name, computed inline (no priority table)
-        mn = cur_adj.groupBy("u").agg(F.min(hexint15(F.col("v"))).alias("mn"))
-        winners = (
-            remaining.join(mn.withColumnRenamed("u", "url"), "url", "left")
-            .where(F.col("mn").isNull() | (hexint15(F.col("url")) < F.col("mn")))
-            .select("url")
-            .localCheckpoint(eager=True)
+            bc(rem.withColumnRenamed("url", "u")), "u", "left_semi"
+        ).join(bc(rem.withColumnRenamed("url", "v")), "v", "left_semi")
+        # min neighbor (priority, url) per remaining vertex — priority is a
+        # pure function of the name, computed inline (no priority table)
+        mn = cur_adj.groupBy("u").agg(F.min(_priority("v")).alias("mn"))
+        winners, _ = materialize(  # read twice: neighborhood probe + merge
+            rem.join(mn.withColumnRenamed("u", "url"), "url", "left")
+            .where(F.col("mn").isNull() | (_priority("url") < F.col("mn")))
+            .select("url"),
+            None,
         )
-        # closed neighborhood of the winners leaves the game
+        # the winners' neighbors leave the game
         touched = cur_adj.join(
-            winners.withColumnRenamed("url", "v"), "v", "left_semi"
+            bc(winners.withColumnRenamed("url", "v")), "v", "left_semi"
         ).select(F.col("u").alias("url"))
-        nxt = (
-            remaining.join(winners, "url", "left_anti")
-            .join(touched, "url", "left_anti")
-            .localCheckpoint(eager=True)
+        return (
+            state.join(touched, "url", "left_anti")
+            .join(winners.withColumn("_w", F.lit(True)), "url", "left")
+            .select("url", F.coalesce(F.col("won"), F.col("_w")).alias("won"))
         )
-        n_nxt = nxt.count()
-        if n_nxt >= n_rem:  # no progress: neighbor priority tie
-            raise RuntimeError(
-                "maximal_independent_set stalled (60-bit priority tie)"
-            )
-        remaining.unpersist()
-        remaining = nxt
-        n_rem = n_nxt
-        mis = mis.union(winners)
-    remaining.unpersist()
-    adj.unpersist()
-    return mis
+
+    state = iterate(
+        "maximal_independent_set", state, step, range(max_rounds),
+        stats=remaining,
+        project=lambda state, row, _k: (state, {"remaining": row["n"]}),
+        stop=lambda r: r["remaining"] == 0, strict=True,
+    )
+    return state.where(F.col("won")).select("url")

@@ -12,8 +12,9 @@ Formulation: classic pointer doubling. State is one vertex-sized table
 never the full crawl. Each round every pointer jumps to its pointee's
 pointer (one hash equi-join of the state table against itself), so a
 chain of length L resolves in ceil(log2 L) rounds: 30 rounds cover a
-billion-hop chain. Each round is eagerly ``localCheckpoint``-ed so
-lineage stays flat and the self-join reads a materialized table.
+billion-hop chain. The rounds run on plans/fixpoint.iterate: each round's
+one action is the mover count over its lazy localCheckpoint, so lineage
+stays flat and the next self-join reads a materialized table.
 
 Loops (redirect cycles, self-redirects, and chains that lead INTO a
 cycle) can never resolve. They are detected by PROGRESS STALL: while any
@@ -30,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import iterate
 
 
 def resolve_redirects(
@@ -63,34 +66,34 @@ def resolve_redirects(
         F.lit(1).cast("long").alias("hops"),
     ).localCheckpoint(eager=True)
 
-    prev_movers = -1
-    mover_counts: list[int] = []
-    for _ in range(max_rounds):
+    def step(f: DataFrame, _k: int) -> DataFrame:
         m = f.select(
             F.col("url").alias("m_url"),
             F.col("ptr").alias("m_ptr"),
             F.col("hops").alias("m_hops"),
         )
-        stepped = (
-            f.join(m, f["ptr"] == m["m_url"], "left")
-            .select(
-                "url",
-                F.coalesce("m_ptr", "ptr").alias("ptr"),
-                (F.col("hops") + F.coalesce("m_hops", F.lit(0))).alias("hops"),
-                F.col("m_url").isNotNull().alias("_moved"),
-            )
-            .localCheckpoint(eager=True)
+        return f.join(m, f["ptr"] == m["m_url"], "left").select(
+            "url",
+            F.coalesce("m_ptr", "ptr").alias("ptr"),
+            (F.col("hops") + F.coalesce("m_hops", F.lit(0))).alias("hops"),
+            F.col("m_url").isNotNull().alias("_moved"),
         )
-        movers = stepped.filter(F.col("_moved")).count()
-        mover_counts.append(movers)
-        f = stepped.drop("_moved")
-        if movers == 0 or movers == prev_movers:
-            break
-        prev_movers = movers
 
+    records: list[dict] = []
+
+    def stop(r: dict) -> bool:
+        prev = records[-2]["movers"] if len(records) > 1 else -1
+        return r["movers"] in (0, prev)
+
+    f = iterate(
+        "resolve_redirects", f, step, range(max_rounds),
+        stats=[F.count_if("_moved").alias("movers")],
+        project=lambda f, row, _k: (f.drop("_moved"), {"movers": row["movers"]}),
+        stop=stop, metrics=records,
+    )
     if metrics is not None:
-        metrics["rounds"] = len(mover_counts)
-        metrics["movers"] = mover_counts
+        metrics["rounds"] = len(records)
+        metrics["movers"] = [r["movers"] for r in records]
 
     keys = rmap.select(F.col("src").alias("_k"))
     return f.join(keys, f["ptr"] == keys["_k"], "left").select(

@@ -34,21 +34,54 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.textops import hexint15
+from pagerank_spark.plans.fixpoint import iterate
 
 
-def wl_refinement(
-    edges: DataFrame, rounds: int = 2, materialize: bool = True
-) -> DataFrame:
+def _round(e: DataFrame, labels: DataFrame) -> DataFrame:
+    """One refinement round over the (src, dst) edges ``e``: the (url,
+    lab) labels rehashed with their out- and in-neighborhood folds. Pure
+    plan construction — exposed so plan audits can see the in-round
+    physical plan."""
+    lab_of = labels.select(F.col("url").alias("_lu"), F.col("lab").alias("_l"))
+    folds = []
+    for key, nbr, name in (("src", "dst", "out"), ("dst", "src", "in")):
+        h = hexint15(F.col("_l").cast("string")).cast("decimal(38,0)")
+        folds.append(
+            e.join(lab_of, e[nbr] == lab_of["_lu"])
+            .groupBy(F.col(key).alias("url"))
+            .agg(
+                F.sum(h).alias(f"_s_{name}"),
+                F.count(F.lit(1)).cast("long").alias(f"_c_{name}"),
+            )
+        )
+    combined = labels.join(folds[0], "url", "left").join(folds[1], "url", "left")
+    zero = F.lit(0).cast("decimal(38,0)")
+    return combined.select(
+        "url",
+        hexint15(
+            F.concat_ws(
+                "|",
+                F.col("lab").cast("string"),
+                F.coalesce(F.col("_s_out"), zero).cast("string"),
+                F.coalesce(F.col("_c_out"), F.lit(0)).cast("string"),
+                F.coalesce(F.col("_s_in"), zero).cast("string"),
+                F.coalesce(F.col("_c_in"), F.lit(0)).cast("string"),
+            )
+        ).alias("lab"),
+    )
+
+
+def wl_refinement(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """(url, wl_label) after ``rounds`` of directed 1-WL color refinement
     over the (src, dst) edge table; labels are 60-bit md5 ints, round 0
     is the uniform label 0 (so round 1 labels encode the in/out degree
     pair, round 2 the degree pair's radius-1 multiset, ...).
 
-    Per round: two partial-aggregated exchanges (out-fold keyed by src,
-    in-fold keyed by dst) + two vertex-sized LEFT joins; lineage is cut
-    with an eager localCheckpoint per round (the fixpoint-loop
-    convention; ``materialize=False`` skips it so plan audits can see the
-    in-round physical plan).
+    Per round (``_round``): two partial-aggregated exchanges (out-fold
+    keyed by src, in-fold keyed by dst) + two vertex-sized LEFT joins.
+    The rounds run on plans/fixpoint.iterate; a fixed-round loop has no
+    stop statistic, so each round's one action is its eager
+    localCheckpoint.
     """
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
@@ -58,39 +91,12 @@ def wl_refinement(
         .union(e.select(F.col("dst").alias("url")))
         .distinct()
     )
-    labels = verts.select("url", F.lit(0).cast("bigint").alias("lab"))
-    for _ in range(rounds):
-        lab_of = labels.select(F.col("url").alias("_lu"), F.col("lab").alias("_l"))
-        folds = []
-        for key, nbr, name in (("src", "dst", "out"), ("dst", "src", "in")):
-            h = hexint15(F.col("_l").cast("string")).cast("decimal(38,0)")
-            folds.append(
-                e.join(lab_of, e[nbr] == lab_of["_lu"])
-                .groupBy(F.col(key).alias("url"))
-                .agg(
-                    F.sum(h).alias(f"_s_{name}"),
-                    F.count(F.lit(1)).cast("long").alias(f"_c_{name}"),
-                )
-            )
-        combined = (
-            labels.join(folds[0], "url", "left").join(folds[1], "url", "left")
-        )
-        zero = F.lit(0).cast("decimal(38,0)")
-        labels = combined.select(
-            "url",
-            hexint15(
-                F.concat_ws(
-                    "|",
-                    F.col("lab").cast("string"),
-                    F.coalesce(F.col("_s_out"), zero).cast("string"),
-                    F.coalesce(F.col("_c_out"), F.lit(0)).cast("string"),
-                    F.coalesce(F.col("_s_in"), zero).cast("string"),
-                    F.coalesce(F.col("_c_in"), F.lit(0)).cast("string"),
-                )
-            ).alias("lab"),
-        )
-        if materialize:
-            labels = labels.localCheckpoint(eager=True)
+    labels = iterate(
+        "wl_refinement",
+        verts.select("url", F.lit(0).cast("bigint").alias("lab")),
+        lambda labels, _k: _round(e, labels),
+        range(rounds),
+    )
     return labels.select("url", F.col("lab").alias("wl_label"))
 
 

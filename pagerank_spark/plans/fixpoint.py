@@ -1,9 +1,11 @@
 """One round driver for the iterative operators (``iterate``).
 
 PageRank (both SpMV backends), components, label propagation, Katz,
-eigenvector centrality and HITS supply per round only a ``step`` that
-builds the next frame and, optionally, ``stats``: aggregate columns over it
-(a stop statistic, a norm). The driver does the rest of the round:
+eigenvector centrality, HITS, k-core, coreness, k-truss, coloring, MIS,
+redirect resolution, WL refinement and feature propagation supply per
+round only a ``step`` that builds the next frame and, optionally,
+``stats``: aggregate columns over it (a stop statistic, a norm). The
+driver does the rest of the round:
 
 1. ONE action: the stats aggregate over a LAZY ``localCheckpoint`` of the
    frame, or without stats an EAGER ``localCheckpoint``. Lineage is cut at

@@ -10,7 +10,7 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture(scope="module")
 def golden_graph(spark):
     from pagerank_spark.fixtures import GOLDEN_SMALL_EDGES
     from pagerank_spark.operators.graph_build import LinkGraph

@@ -167,25 +167,37 @@ def test_pagerank_job_budget(spark, golden_graph, method, max_overhead):
 
 
 def _round_budget_cases():
+    from pagerank_spark.operators.coloring import greedy_coloring
     from pagerank_spark.operators.components import connected_components
     from pagerank_spark.operators.eigencentrality import eigenvector_centrality
+    from pagerank_spark.operators.featprop import feature_propagation
     from pagerank_spark.operators.hits import hits
     from pagerank_spark.operators.katz import katz_centrality
+    from pagerank_spark.operators.kcore import core_numbers, k_core
+    from pagerank_spark.operators.ktruss import k_truss
     from pagerank_spark.operators.labelprop import (
         label_propagation,
         seeded_label_propagation,
     )
+    from pagerank_spark.operators.mis import maximal_independent_set
+    from pagerank_spark.operators.redirects import resolve_redirects
+    from pagerank_spark.operators.wl import wl_refinement
 
-    def components(g, k):
-        # the 64-vertex path is still contracting after 4 rounds: the
-        # operator raises, after running exactly k rounds
-        with pytest.raises(RuntimeError):
-            connected_components(g["path"], max_iterations=k)
+    def raises(run):
+        # the input is still changing after 4 rounds: the operator raises,
+        # after running exactly k rounds
+        def check(g, k):
+            with pytest.raises(RuntimeError):
+                run(g, k)
+        return check
+
+    components = raises(lambda g, k: connected_components(g["path"], max_iterations=k))
 
     # (name, run(graphs, rounds), budget): jobs per round at most the
-    # budget; the job counts before the change were components 9, both
-    # labelprop modes 7, seeded 6, katz 4, eigenvector 9, hits 6.5 per
-    # half-round
+    # budget; the job counts before the round driver were components 9,
+    # both labelprop modes 7, seeded 6, katz 4, eigenvector 9, hits 6.5 per
+    # half-round, k_core 5, core_numbers 13, k_truss 15.5-16, coloring
+    # 17.5-18.5, mis 18, redirects 6, wl 10-11, featprop 5
     return [
         pytest.param("components", components, 9, id="components"),
         # disjoint pairs swap labels every round, so both stop modes run k
@@ -203,6 +215,24 @@ def _round_budget_cases():
         # k half-rounds
         pytest.param("hits", lambda g, k: hits(
             g["path"], iterations=k // 2).count(), 6, id="hits"),
+        # the path peels one vertex per end per round
+        pytest.param("k_core", raises(lambda g, k: k_core(
+            g["path"], 2, max_rounds=k)), 4, id="k_core"),
+        pytest.param("core_numbers", raises(lambda g, k: core_numbers(
+            g["path"], max_rounds=k)), 9, id="core_numbers"),
+        pytest.param("k_truss", raises(lambda g, k: k_truss(
+            g["cylinder"], 4, max_rounds=k)), 15, id="k_truss"),
+        # on the priority-ordered path two vertices settle per round
+        pytest.param("coloring", raises(lambda g, k: greedy_coloring(
+            g["ranked"], max_rounds=k)), 16, id="coloring"),
+        pytest.param("mis", raises(lambda g, k: maximal_independent_set(
+            g["ranked"], max_rounds=k)), 15, id="mis"),
+        pytest.param("redirects", lambda g, k: resolve_redirects(
+            g["chain"], max_rounds=k).count(), 5, id="redirects"),
+        pytest.param("wl", lambda g, k: wl_refinement(
+            g["path"], rounds=k).count(), 11.5, id="wl"),
+        pytest.param("featprop", lambda g, k: feature_propagation(
+            g["path"], g["features"], rounds=k).count(), 5, id="featprop"),
     ]
 
 
@@ -211,11 +241,33 @@ def test_fixpoint_round_job_budget(spark, name, run, budget):
     # every operator on plans/fixpoint.iterate pays one action per round;
     # under AQE that action's jobs per round are pinned here, measured as
     # the job difference between a 2- and a 4-round run in one job group
+    import hashlib
+
     sc = spark.sparkContext
+    # a triangulated cylinder of 4-rings: every edge but the two end rings
+    # closes 2 triangles, so the 4-truss unravels ring by ring from the ends
+    cylinder = [(f"c{r:02d}{j}", f"c{r:02d}{(j + 1) % 4}") for r in range(16) for j in range(4)]
+    cylinder += [(f"c{r:02d}{j}", f"c{r + 1:02d}{(j + d) % 4}")
+                 for r in range(15) for j in range(4) for d in (0, 1)]
+    # a path whose md5 priorities increase along it: one Luby winner per
+    # round, and two colored vertices per round after the first
+    ranked = sorted((f"q{i:03d}" for i in range(64)),
+                    key=lambda u: hashlib.md5(u.encode()).hexdigest()[:15])
     graphs = {
         "path": spark.createDataFrame(
             [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(63)], ["src", "dst"]
         ).localCheckpoint(),
+        "cylinder": spark.createDataFrame(cylinder, ["src", "dst"]).localCheckpoint(),
+        "ranked": spark.createDataFrame(
+            list(zip(ranked, ranked[1:])), ["src", "dst"]
+        ).localCheckpoint(),
+        "chain": spark.createDataFrame(
+            [(f"r{i:03d}", f"r{i + 1:03d}") for i in range(200)], ["src", "dst"]
+        ).localCheckpoint(),
+        "features": spark.createDataFrame(
+            [(f"p{i:03d}", d, float(i + d)) for i in range(64) for d in range(2)],
+            ["url", "dim", "x"],
+        ),
         "pairs": spark.createDataFrame(
             [(f"a{i}", f"b{i}") for i in range(8)], ["src", "dst"]
         ).localCheckpoint(),
@@ -1081,12 +1133,17 @@ def test_chunk_documents_zero_shuffle_single_generate(spark, docs_path):
 def test_wl_partial_aggregated_folds_no_python(spark):
     # the per-side multiset folds must map-side combine (hub fan-in
     # collapses before the wire) and stay JVM-side; no global sort
-    from pagerank_spark.operators.wl import wl_refinement
+    from pyspark.sql import functions as F
+
+    from pagerank_spark.operators.wl import _round
 
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"]
     )
-    plan = _physical(wl_refinement(e, rounds=1, materialize=False))
+    labels = spark.createDataFrame([("a",), ("b",), ("c",)], ["url"]).select(
+        "url", F.lit(0).cast("bigint").alias("lab")
+    )
+    plan = _physical(_round(e, labels))
     assert "partial" in plan.lower(), plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     assert "rangepartitioning" not in plan, plan

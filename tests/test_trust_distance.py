@@ -26,6 +26,13 @@ def tgraph(spark):
     g.unpersist()
 
 
+@pytest.fixture(scope="module")
+def trust(spark, tgraph):
+    """TrustRank seeded on good1 + good2, converged once for the module."""
+    seeds = spark.createDataFrame([("good1",), ("good2",)], ["url"])
+    return trust_rank(tgraph, seeds, epsilon=1e-9)
+
+
 def test_make_seed_vector(spark, tgraph):
     seeds = spark.createDataFrame([("good1",), ("good2",), ("nowhere",)], ["url"])
     v = {r.url: r.v for r in make_seed_vector(tgraph, seeds).collect()}
@@ -40,12 +47,11 @@ def test_make_seed_vector_no_match_raises(spark, tgraph):
         make_seed_vector(tgraph, seeds)
 
 
-def test_trust_rank_equals_personalized_pagerank(spark, tgraph):
+def test_trust_rank_equals_personalized_pagerank(spark, tgraph, trust):
     """Seed-table TrustRank == query-predicate personalized PageRank when
     the seed set equals the query's match set (reference pagerank.py:97-119
     composition, seed-list spelling)."""
-    seeds = spark.createDataFrame([("good1",), ("good2",)], ["url"])
-    tr = {r.url: r.rank for r in trust_rank(tgraph, seeds, epsilon=1e-9).collect()}
+    tr = {r.url: r.rank for r in trust.collect()}
     v = tgraph.make_personalization_vector("good")
     pp = {r.url: r.rank for r in tgraph.pagerank(v_df=v, epsilon=1e-9).collect()}
     assert tr.keys() == pp.keys()
@@ -53,10 +59,9 @@ def test_trust_rank_equals_personalized_pagerank(spark, tgraph):
         assert tr[u] == pytest.approx(pp[u], abs=1e-12)
 
 
-def test_spam_mass_separates_spam_cluster(spark, tgraph):
-    seeds = spark.createDataFrame([("good1",), ("good2",)], ["url"])
+def test_spam_mass_separates_spam_cluster(spark, tgraph, trust):
     pr = tgraph.pagerank(epsilon=1e-9)
-    tr = trust_rank(tgraph, seeds, epsilon=1e-9)
+    tr = trust
     m = {r.url: r.spam_mass for r in spam_mass(pr, tr).collect()}
     # trust never teleports into the spam cycle's basin beyond what flows
     # through page3, so the spam cluster's mass is markedly higher than the
