@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.plans.fixpoint import iterate, materialize
+from pagerank_spark.plans.fixpoint import iterate, materialize, release
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -130,7 +130,7 @@ def connected_components(
             .select("url", F.coalesce(F.col("component"), F.col("url")).alias("component"))
             .localCheckpoint(eager=True)
         )
-        e.unpersist()
+        release(e)
         return result
     finally:
         all_vertices.unpersist()

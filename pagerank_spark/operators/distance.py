@@ -7,21 +7,23 @@ has no multi-hop operator (its ratio filter is single-hop); this is the
 standard Spark formulation: level-synchronous frontier expansion, the same
 shape Pregel/GraphX BFS lowers to.
 
-Per level: one src-keyed join of the (small) frontier against the
-pre-partitioned edge cache, a distinct on the discovered endpoints, and a
-LEFT ANTI join against the settled set — shuffles are bounded by frontier
-and settled sizes (vertex-sized), never edge-sized beyond the join itself.
-The per-level driver action (frontier-empty check) is inherent to BFS —
-level k+1 cannot be scheduled until level k's frontier is known — and each
-level's result is an eager ``localCheckpoint``, so lineage stays flat no
-matter the depth (the anti-join side would otherwise re-derive every prior
-level each round).
+Every sweep here runs on ``plans/fixpoint.sweep``: the state is every
+settled row plus its ``level``, one checkpoint per level, and a level is
+one src-keyed join of the (small) previous level against the edge table,
+a distinct or a map-side-combined aggregate on the discovered endpoints,
+and a LEFT ANTI join against the settled keys — shuffles are bounded by
+frontier and settled sizes (vertex-sized), never edge-sized beyond the
+join itself. The level's one action, its row count, is inherent to BFS
+(level k+1 cannot be scheduled until level k is known) and also
+materializes the level's checkpoint, so lineage stays flat at any depth.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import LEVEL, iterate, release, sweep
 
 
 def link_distance(
@@ -32,35 +34,14 @@ def link_distance(
     """(url, dist) — minimum number of directed hops from any seed url,
     settled per level (dist 0 = the seeds themselves, capped at
     ``max_depth``; unreachable urls are absent)."""
-    if max_depth < 0:
-        raise ValueError("max_depth must be >= 0")
     e = edges.select(F.col("src").cast("string"), F.col("dst").cast("string"))
-    frontier = (
-        seeds.select(F.col("url").cast("string"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
+    x, _ = sweep(
+        "link_distance",
+        seeds.select(F.col("url").cast("string")).distinct(),
+        lambda f: f.join(e, f["url"] == e["src"]).select(F.col("dst").alias("url")).distinct(),
+        ["url"], max_depth,
     )
-    levels = [frontier]
-    settled = frontier.select("url")
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["url"] == e["src"])
-            .select(F.col("dst").alias("url"))
-            .distinct()
-            .join(settled, "url", "left_anti")
-            .withColumn("dist", F.lit(d).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        settled = settled.union(nxt.select("url"))
-        frontier = nxt
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out.select("url", "dist")
+    return x.select("url", F.col(LEVEL).alias("dist"))
 
 
 def nearest_seed(
@@ -77,44 +58,22 @@ def nearest_seed(
 
     Unlike :func:`multi_source_distance` (whose state is (source, url)-keyed
     — k sources cost a k×-wide frontier), the Voronoi frontier keeps ONE row
-    per vertex: after each expansion a ``min(seed)`` aggregate settles every
-    newly-reached vertex exactly once, so state and shuffles stay
+    per vertex: after each expansion a ``min(seed)`` aggregate settles
+    every newly-reached vertex exactly once, so state and shuffles stay
     vertex-sized no matter how many seeds there are. Per level: one
-    src-keyed join against the edge table, one map-side-combined min
-    aggregate, one anti-join against the settled set; every level
-    localCheckpoint-ed (flat lineage at any depth).
+    src-keyed join against the edge table, one anti-join against the
+    settled set, one map-side-combined min aggregate.
     """
-    if max_depth < 0:
-        raise ValueError("max_depth must be >= 0")
     e = edges.select(F.col("src").cast("string"), F.col("dst").cast("string"))
-    frontier = (
-        seeds.select(F.col("url").cast("string"))
-        .distinct()
-        .select("url", F.col("url").alias("seed"))
-        .withColumn("dist", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
+    x, _ = sweep(
+        "nearest_seed",
+        seeds.select(F.col("url").cast("string")).distinct()
+        .select("url", F.col("url").alias("seed")),
+        lambda f: f.join(e, f["url"] == e["src"]).select(F.col("dst").alias("url"), "seed"),
+        ["url"], max_depth,
+        reduce=lambda new: new.groupBy("url").agg(F.min("seed").alias("seed")),
     )
-    levels = [frontier]
-    settled = frontier.select("url")
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["url"] == e["src"])
-            .select(F.col("dst").alias("url"), "seed")
-            .join(settled, "url", "left_anti")
-            .groupBy("url")
-            .agg(F.min("seed").alias("seed"))
-            .withColumn("dist", F.lit(d).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        settled = settled.union(nxt.select("url"))
-        frontier = nxt
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out.select("url", "seed", "dist")
+    return x.select("url", "seed", F.col(LEVEL).alias("dist"))
 
 
 def multi_source_distance(
@@ -131,38 +90,25 @@ def multi_source_distance(
 
     Same scale shape as link_distance: per level one src-keyed join of the
     frontier against the edge table, a distinct, and an anti-join against
-    the settled (source, url) set; every level localCheckpoint-ed.
+    the settled (source, url) set.
     """
-    if max_depth < 0:
-        raise ValueError("max_depth must be >= 0")
     e = edges.select(F.col("src").cast("string"), F.col("dst").cast("string"))
-    frontier = (
+    x, _ = sweep(
+        "multi_source_distance", _sources(sources),
+        lambda f: f.join(e, f["url"] == e["src"])
+        .select("source", F.col("dst").alias("url")).distinct(),
+        ["source", "url"], max_depth,
+    )
+    return x.select("source", "url", F.col(LEVEL).alias("dist"))
+
+
+def _sources(sources: DataFrame) -> DataFrame:
+    """(source, url) level-0 rows: each source at itself."""
+    return (
         sources.select(F.col("url").cast("string").alias("source"))
         .distinct()
         .select("source", F.col("source").alias("url"))
-        .withColumn("dist", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
     )
-    levels = [frontier]
-    settled = frontier.select("source", "url")
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["url"] == e["src"])
-            .select("source", F.col("dst").alias("url"))
-            .distinct()
-            .join(settled, ["source", "url"], "left_anti")
-            .withColumn("dist", F.lit(d).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        settled = settled.union(nxt.select("source", "url"))
-        frontier = nxt
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out.select("source", "url", "dist")
 
 
 def betweenness_sample(
@@ -179,15 +125,16 @@ def betweenness_sample(
     "which pages sit ON the shortest click-paths" rather than "which pages
     get linked".
 
-    Forward pass: level-synchronous BFS with (source, url)-keyed state
-    (the multi_source_distance skeleton) carrying sigma = #shortest paths —
+    Forward pass: a ``sweep`` with (source, url)-keyed state (the
+    multi_source_distance skeleton) carrying sigma = #shortest paths —
     exact BIGINTs, aggregated with one partial-agg SUM per level instead of
-    a distinct. Backward pass: levels processed deepest-first;
+    a distinct. Backward pass: ``iterate`` over the levels deepest-first on
+    the (source, url, sigma, level, delta) state, where level d's
+    checkpoint replaces its forward rows;
     delta(u) = sum over DAG successors v of sigma_u/sigma_v * (1+delta_v),
-    one hash equi-join against the edge table and one against the
-    (level d+1, delta) table per level, every level localCheckpoint-ed
-    (flat lineage both directions). betweenness(v) = sum of delta(s, v)
-    over the sample, v != s (level-0 rows excluded).
+    one hash equi-join against the edge table and one against the level
+    d+1 rows per level. betweenness(v) = sum of delta(s, v) over the
+    sample, v != s (level-0 rows excluded).
 
     Determinism contract for the DuckDB twin: sigma is exact integer
     arithmetic; each delta contribution is a fixed IEEE expression of
@@ -206,46 +153,27 @@ def betweenness_sample(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    frontier = (
-        sources.select(F.col("url").cast("string").alias("source"))
-        .distinct()
-        .select("source", F.col("source").alias("url"))
-        .withColumn("sigma", F.lit(1).cast("bigint"))
-        .localCheckpoint(eager=True)
+    x, depth = sweep(
+        "betweenness",
+        _sources(sources).withColumn("sigma", F.lit(1).cast("bigint")),
+        lambda f: f.join(e, f["url"] == e["src"])
+        .select("source", F.col("dst").alias("url"), "sigma"),
+        ["source", "url"], max_depth,
+        reduce=lambda new: new.groupBy("source", "url")
+        .agg(F.sum("sigma").cast("bigint").alias("sigma")),
     )
-    levels = [frontier]
-    settled = frontier.select("source", "url")
-    for _d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["url"] == e["src"])
-            .select("source", F.col("dst").alias("url"), "sigma")
-            .join(settled, ["source", "url"], "left_anti")
-            .groupBy("source", "url")
-            .agg(F.sum("sigma").cast("bigint").alias("sigma"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        settled = settled.union(nxt.select("source", "url"))
-        frontier = nxt
-    depth = len(levels) - 1
-    zero = F.lit(0).cast("decimal(28,9)")
     if depth == 0:
-        return levels[0].select(
-            "url", F.lit(0.0).alias("betweenness")
-        ).where(F.lit(False))
-    deltas = {
-        depth: levels[depth].select("source", "url", "sigma", zero.alias("delta"))
-    }
-    for d in range(depth - 1, 0, -1):
-        up = levels[d]
-        vn = deltas[d + 1]
+        return x.select("url", F.lit(0.0).alias("betweenness")).where(F.lit(False))
+    lvl, fwd = F.col(LEVEL), x
+
+    def step(x: DataFrame, d: int) -> DataFrame:
+        nonlocal state
+        state = x
+        u, v = x.where(lvl == d).alias("u"), x.where(lvl == d + 1).alias("v")
         contrib = (
-            up.alias("u")
-            .join(e.alias("ed"), F.col("u.url") == F.col("ed.src"))
+            u.join(e.alias("ed"), F.col("u.url") == F.col("ed.src"))
             .join(
-                vn.alias("v"),
+                v,
                 (F.col("v.source") == F.col("u.source"))
                 & (F.col("v.url") == F.col("ed.dst")),
             )
@@ -261,24 +189,28 @@ def betweenness_sample(
                 .alias("c"),
             )
             .groupBy("source", "url")
-            .agg(F.sum("c").alias("sd"))
+            .agg(F.sum("c").cast("decimal(28,9)").alias("sd"))
         )
-        deltas[d] = (
-            up.join(contrib, ["source", "url"], "left")
-            .select(
-                "source",
-                "url",
-                "sigma",
-                F.coalesce(F.col("sd").cast("decimal(28,9)"), zero).alias("delta"),
-            )
-            .localCheckpoint(eager=True)
+        return x.where(lvl == d).join(contrib, ["source", "url"], "left").select(
+            "source", "url", "sigma", F.coalesce(F.col("sd"), F.col("delta")).alias("delta"),
         )
-    out = deltas[1].select("url", "delta")
-    for d in range(2, depth + 1):
-        out = out.unionByName(deltas[d].select("url", "delta"))
-    return out.groupBy("url").agg(
+
+    # level d's checkpoint replaces its forward rows in the state
+    state = None
+    x = iterate(
+        "betweenness.back",
+        fwd.withColumn("delta", F.lit(0).cast("decimal(28,9)")),
+        step, range(depth - 1, 0, -1),
+        project=lambda frame, _row, d: (
+            state.where(lvl != d).unionByName(frame.withColumn(LEVEL, F.lit(d))), None
+        ),
+    )
+    out = x.where(lvl > 0).groupBy("url").agg(
         F.round(F.sum("delta").cast("double"), 6).alias("betweenness")
     )
+    release(fwd, keep=out)
+    release(e)
+    return out
 
 
 def closeness_sample(
@@ -337,10 +269,8 @@ def distance_histogram(
     distance and the exact calibrator for HyperBall's estimated
     neighborhood function. One tiny rollup over
     :func:`multi_source_distance`'s (source, url, dist) rows — the BFS
-    cost structure (frontier-sized shuffles, per-level checkpoint) is
+    cost structure (frontier-sized shuffles, one action per level) is
     inherited unchanged."""
-    from pyspark.sql import functions as F
-
     d = multi_source_distance(edges, sources, max_depth=max_depth)
     return (
         d.groupBy(F.col("dist").cast("long").alias("dist"))

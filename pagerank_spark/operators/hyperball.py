@@ -31,7 +31,11 @@ signatures use, operators/dedup.py): a round is
 
 so the only edge-sized operation is the join, and the exchange feeding
 the aggregate carries partial maxima (map-side combine collapses each
-vertex's candidates per partition first). No Python touches rows at any
+vertex's candidates per partition first). The rounds run on
+plans/fixpoint.iterate: each round checkpoints only the new counters, and
+the state is the union of every round's counters tagged with a literal
+``round``, so a round reads just the previous round's checkpoint and the
+result is one estimate per (url, round). No Python touches rows at any
 point — registers, estimates and corrections are all JVM Column
 expressions.
 
@@ -55,6 +59,7 @@ from pyspark.sql import functions as F
 
 from pagerank_spark.operators.hits import resolve_broadcast
 from pagerank_spark.operators.textops import hexint15
+from pagerank_spark.plans.fixpoint import iterate, materialize
 
 HB_LOG2M = 4  # default m=16 registers: +-26% per-vertex, exact small balls
 
@@ -122,10 +127,10 @@ def hyperball(
 ) -> DataFrame:
     """(url, round, ball) for round 0..``rounds``: the estimated number of
     vertices within ``round`` hops of ``url`` along OUT-edges (round 0 is
-    always ~1). One join + one max-aggregate per round; counters are
-    vertex-sized throughout, checkpointed eagerly per round to keep
-    lineage flat (they are the only state, exactly like distance.py's
-    frontier). ``broadcast_counters`` None = auto by vertex count
+    always ~1). One join + one max-aggregate per round on
+    plans/fixpoint.iterate; counters are vertex-sized throughout, and
+    every round's checkpoint stays in the state (the result reads all of
+    them). ``broadcast_counters`` None = auto by vertex count
     (hits.resolve_broadcast's shared 10M threshold)."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
@@ -135,32 +140,25 @@ def hyperball(
         .unionByName(e.select(F.col("dst").alias("url")))
         .distinct()
     )
-    m = 1 << log2m
-    cols = _reg_cols(m)
+    cols = _reg_cols(1 << log2m)
+    x0, row = materialize(init_counters(verts, log2m), [F.count(F.lit(1)).alias("n")])
     if broadcast_counters is None:
-        broadcast_counters = resolve_broadcast(None, verts.count())
-    counters = init_counters(verts, log2m).localCheckpoint(eager=True)
-    est = ball_estimate(log2m)
-    snaps = [counters.select("url", F.lit(0).cast("int").alias("round"), est.alias("ball"))]
-    for t in range(1, rounds + 1):
-        side = F.broadcast(counters) if broadcast_counters else counters
-        pulled = e.join(side, e["dst"] == side["url"]).select(
-            e["src"].alias("url"), *cols
-        )
-        # every round's counters stay persisted: the per-round snapshots in
-        # the result union still read them, and localCheckpoint truncates
-        # lineage so dropped blocks could never be recomputed. They are
-        # vertex-sized x rounds — the same footprint distance.py carries.
-        counters = (
-            counters.unionByName(pulled)
-            .groupBy("url")
-            .agg(*[F.max(c).alias(c) for c in cols])
-            .localCheckpoint(eager=True)
-        )
-        snaps.append(
-            counters.select("url", F.lit(t).cast("int").alias("round"), est.alias("ball"))
-        )
-    return reduce(DataFrame.unionByName, snaps)
+        broadcast_counters = resolve_broadcast(None, row["n"])
+    hist = None
+
+    def step(x: DataFrame, t: int) -> DataFrame:
+        nonlocal hist
+        hist = x
+        cur = x.where(F.col("round") == t - 1).select("url", *cols)
+        side = F.broadcast(cur) if broadcast_counters else cur
+        pulled = e.join(side, e["dst"] == side["url"]).select(e["src"].alias("url"), *cols)
+        return cur.unionByName(pulled).groupBy("url").agg(*[F.max(c).alias(c) for c in cols])
+
+    x = iterate(
+        "hyperball", x0.withColumn("round", F.lit(0)), step, range(1, rounds + 1),
+        project=lambda ck, _row, t: (hist.unionByName(ck.withColumn("round", F.lit(t))), None),
+    )
+    return x.select("url", "round", ball_estimate(log2m).alias("ball"))
 
 
 def neighborhood_function(balls: DataFrame) -> DataFrame:

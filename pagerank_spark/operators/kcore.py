@@ -149,6 +149,39 @@ def k_core(
     )
 
 
+def _coreness_round(
+    adj: DataFrame, x: DataFrame, k: int, bc: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Round ``k`` of the h-index fixpoint over the (u, v) adjacency ``adj``
+    and the (v, c, chg) state ``x`` (``bc``: the broadcast policy); a
+    separate function so plan audits can see the in-round plan."""
+    cand_adj = adj
+    if k:  # (u, v) rows of every u next to a vertex v that changed
+        frontier = bc(x.where("chg").select("v"))
+        cand = adj.join(frontier, "v", "left_semi").select("u").distinct()
+        cand_adj = adj.join(bc(cand), "u", "left_semi")
+    hist = (
+        cand_adj.join(bc(x.select("v", F.col("c").alias("x"))), "v")
+        .groupBy("u", "x")
+        .agg(F.count("*").alias("_cnt"))
+    )
+    w = (
+        Window.partitionBy("u")
+        .orderBy(F.desc("x"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    newh = (
+        hist.withColumn("_cum", F.sum("_cnt").over(w))
+        .groupBy(F.col("u").alias("v"))
+        .agg(F.max(F.least(F.col("x"), F.col("_cum"))).cast("long").alias("_h"))
+    )
+    return x.join(bc(newh), "v", "left").select(
+        "v",
+        F.coalesce(F.col("_h"), F.col("c")).alias("c"),
+        F.coalesce(F.col("_h") != F.col("c"), F.lit(False)).alias("chg"),
+    )
+
+
 def core_numbers(
     edges: DataFrame,
     src_col: str = "src",
@@ -171,9 +204,10 @@ def core_numbers(
     (v, value) HISTOGRAM — the per-vertex group the window sort touches is
     #distinct neighbor values, not degree, so a 10^7-degree hub
     contributes a handful of histogram rows instead of a 10^7-element
-    sorted buffer. H-index from the histogram: with cum(x) = #neighbors
-    whose value >= x (a running sum over the descending distinct values),
-    H = max_x min(x, cum(x)) — exact integers end to end.
+    sorted buffer (``_coreness_round``). H-index from the histogram: with
+    cum(x) = #neighbors whose value >= x (a running sum over the
+    descending distinct values), H = max_x min(x, cum(x)) — exact integers
+    end to end.
 
     The state is ONE (v, c, chg) frame on plans/fixpoint.iterate. FRONTIER
     rounds: v's h-index depends only on its neighbors' values, so after
@@ -199,36 +233,9 @@ def core_numbers(
         [F.count(F.lit(1)).alias("n")],
     )
     bc = _broadcaster(row["n"])
-    w = (
-        Window.partitionBy("u")
-        .orderBy(F.desc("x"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-
-    def step(x: DataFrame, k: int) -> DataFrame:
-        cand_adj = adj
-        if k:  # (u, v) rows of every u next to a vertex v that changed
-            frontier = bc(x.where("chg").select("v"))
-            cand = adj.join(frontier, "v", "left_semi").select("u").distinct()
-            cand_adj = adj.join(bc(cand), "u", "left_semi")
-        hist = (
-            cand_adj.join(bc(x.select("v", F.col("c").alias("x"))), "v")
-            .groupBy("u", "x")
-            .agg(F.count("*").alias("_cnt"))
-        )
-        newh = (
-            hist.withColumn("_cum", F.sum("_cnt").over(w))
-            .groupBy(F.col("u").alias("v"))
-            .agg(F.max(F.least(F.col("x"), F.col("_cum"))).cast("long").alias("_h"))
-        )
-        return x.join(bc(newh), "v", "left").select(
-            "v",
-            F.coalesce(F.col("_h"), F.col("c")).alias("c"),
-            F.coalesce(F.col("_h") != F.col("c"), F.lit(False)).alias("chg"),
-        )
-
     x = iterate(
-        "core_numbers", x, step, _rounds(max_rounds), stats=changed,
+        "core_numbers", x, lambda x, k: _coreness_round(adj, x, k, bc),
+        _rounds(max_rounds), stats=changed,
         project=lambda x, row, _k: (x, {"changed": row["changed"]}),
         stop=lambda r: r["changed"] == 0, strict=True,
     )

@@ -16,26 +16,24 @@ Hong-Rodia-Olukotun PPoPP'13 and Slota-Rajamanickam-Madduri IPDPS'14):
   repeat until no vertices remain:
     1. TRIM — a vertex with no in-edge or no out-edge in the remaining
        subgraph is its own SCC; peel until stable (kills the tendril mass
-       that dominates web graphs). The peel is a DEGREE FIXPOINT on the
-       vertex table against the FIXED edge checkpoint: each round drops
-       zero-in/zero-out vertices and DECREMENTS their neighbors' cached
-       degrees (edges incident to a dropped vertex are counted exactly
-       once, in the round it drops) — the edge table itself is scanned
-       per round but REBUILT (repartition + checkpoint) only ONCE, after
-       the fixpoint converges. Round-4 trimming rebuilt the edge table
-       every peel layer, so a depth-d tendril chain paid d rebuilds;
-       now it pays d cheap vertex-sized rounds + 1 rebuild.
+       that dominates web graphs). The peel is a DEGREE FIXPOINT on
+       plans/fixpoint.iterate over one vertex table against the FIXED edge
+       checkpoint: each round drops zero-in/zero-out vertices and
+       DECREMENTS their neighbors' degrees (edges incident to a dropped
+       vertex are counted exactly once, in the round it drops) — the edge
+       table itself is scanned per round but REBUILT (repartition +
+       checkpoint) only ONCE, after the fixpoint converges, so a depth-d
+       tendril chain pays d cheap vertex-sized rounds + 1 rebuild.
     2. COLOR — fixpoint of c(v) = min(c(v), min over in-edges (u,v) of
        c(u)): c(v) = the smallest vertex id that reaches v. One
-       edges-join-labels + groupBy-min per round, change detected by the
-       same fold-in probe as labelprop.py (ONE job per round, the max()
-       aggregate materializes the lazy checkpoint).
+       edges-join-labels + groupBy-min per round on plans/fixpoint.iterate,
+       whose one action per round is the max(_chg) change flag.
     3. SETTLE — every color class has exactly one root r with c(r) = r
        (the minimum of the class; any smaller vertex reaching r would
        recolor the class). SCC(r) = vertices of color r that reach r
        through vertices of color r: a backward frontier sweep from the
-       roots restricted to same-color edges — frontier-sized shuffles,
-       eager per-level checkpoints exactly like distance.py.
+       roots restricted to same-color edges — plans/fixpoint.sweep, the
+       frontier-sized shuffles of distance.py.
     Settled SCCs leave the graph; the remainder (color classes that lost
     their root's SCC) re-runs. Rounds are bounded by the condensation
     depth, which trimming keeps tiny on web-shaped graphs.
@@ -53,10 +51,14 @@ follow the shared broadcast auto-policy (hits.resolve_broadcast) so a
 
 from __future__ import annotations
 
+import sys
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.hits import resolve_broadcast
+from pagerank_spark.plans.fixpoint import iterate, materialize, release, sweep
 
 PARTS = ("CORE", "IN", "OUT", "TUBE", "TENDRIL_IN", "TENDRIL_OUT", "DISCONNECTED")
 
@@ -74,17 +76,38 @@ def _directed(edges: DataFrame) -> DataFrame:
     )
 
 
+def _setup(edges: DataFrame, broadcast_labels: bool | None, num_partitions: int | None):
+    """(e, vertices, num_partitions, broadcast_labels): the distinct
+    directed edges repartitioned by ``u`` and checkpointed, the vertex set
+    (one action that also counts it for the broadcast auto-policy) and the
+    resolved options."""
+    num_partitions = num_partitions or int(
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    e = _directed(edges).repartition(num_partitions, "u").localCheckpoint(eager=True)
+    verts, row = materialize(
+        e.select(F.col("u").alias("url")).union(e.select(F.col("v").alias("url"))).distinct(),
+        [F.count(F.lit(1)).alias("n")],
+    )
+    if broadcast_labels is None:
+        broadcast_labels = resolve_broadcast(None, row["n"])
+    return e, verts, num_partitions, broadcast_labels
+
+
 def _trim(e, remaining, b, num_partitions: int, settled: list, metrics=None):
     """Degree-fixpoint trim: peel every vertex with no in-edge or no
     out-edge in the remaining subgraph, against the FIXED edge checkpoint
     ``e`` — no edge-table rebuild inside the loop.
 
-    State is one vertex-sized (url, od, id) degree table. Each round drops
-    the zero-degree vertices and decrements the degrees of their surviving
-    neighbors; an edge contributes a decrement exactly once (the round its
-    endpoint drops), so the cached degrees always equal the true degrees of
-    the remaining subgraph. Returns (remaining, e) with ``e`` rebuilt ONCE
-    (semi-joins + repartition + checkpoint) if anything was trimmed."""
+    The state is one vertex-sized (url, od, id, gone) frame on
+    plans/fixpoint.iterate, ``gone`` = the round the vertex dropped in
+    (null while it remains). Round k drops the remaining zero-degree
+    vertices and decrements the degrees of their neighbors; an edge
+    contributes a decrement exactly once (the round its endpoint drops), so
+    the degrees of the remaining vertices always equal their true degrees
+    in the remaining subgraph. The round's one action is max(gone) and the
+    remaining count. Returns (remaining, e, n_remaining) with ``e`` rebuilt
+    ONCE (semi-joins + repartition + checkpoint) if anything was trimmed."""
     outd = e.groupBy(F.col("u").alias("url")).agg(F.count(F.lit(1)).alias("od"))
     ind = e.groupBy(F.col("v").alias("url")).agg(F.count(F.lit(1)).alias("id"))
     deg = (
@@ -94,21 +117,14 @@ def _trim(e, remaining, b, num_partitions: int, settled: list, metrics=None):
             "url",
             F.coalesce(F.col("od"), F.lit(0)).alias("od"),
             F.coalesce(F.col("id"), F.lit(0)).alias("id"),
+            F.lit(None).cast("int").alias("gone"),
         )
-        .localCheckpoint(eager=True)
     )
-    rounds = 0
-    n_trimmed = 0
-    while True:
-        dropped = (
-            deg.where((F.col("od") <= 0) | (F.col("id") <= 0))
-            .select("url")
-            .localCheckpoint(eager=True)
-        )
-        if dropped.isEmpty():
-            break
-        rounds += 1
-        settled.append(dropped.select("url", F.col("url").alias("component")))
+    alive = F.col("gone").isNull()
+    drops = alive & ((F.col("od") <= 0) | (F.col("id") <= 0))
+
+    def step(deg: DataFrame, k: int) -> DataFrame:
+        dropped = deg.where(drops).select("url")
         # decrements: an edge x->d (d dropping) lowers od(x); d->y lowers
         # id(y). Dropped-side joins broadcast via the shared policy / AQE.
         dec_out = (
@@ -121,33 +137,39 @@ def _trim(e, remaining, b, num_partitions: int, settled: list, metrics=None):
             .groupBy(F.col("v").alias("url"))
             .agg(F.count(F.lit(1)).alias("dec_id"))
         )
-        deg = (
-            deg.join(b(dropped), "url", "left_anti")
-            .join(dec_out, "url", "left")
+        return (
+            deg.join(dec_out, "url", "left")
             .join(dec_in, "url", "left")
             .select(
                 "url",
                 (F.col("od") - F.coalesce(F.col("dec_od"), F.lit(0))).alias("od"),
                 (F.col("id") - F.coalesce(F.col("dec_id"), F.lit(0))).alias("id"),
+                F.when(drops, F.lit(k)).otherwise(F.col("gone")).alias("gone"),
             )
-            .localCheckpoint(eager=True)
         )
-    remaining = deg.select("url")
+
+    recs: list = []
+    deg = iterate(
+        "scc.trim", deg, step, range(1, sys.maxsize),
+        stats=[F.max("gone").alias("last"), F.count_if(alive).alias("n")],
+        project=lambda x, row, k: (x, {"k": k, "last": row["last"] or 0, "n": row["n"]}),
+        stop=lambda r: r["last"] < r["k"], metrics=recs,
+    )
+    rounds, n = recs[-1]["last"], recs[-1]["n"]
+    release(remaining, keep=deg)
+    remaining = deg.where(alive).select("url")
     rebuilt = 0
-    if rounds and not remaining.isEmpty():
+    if rounds:
+        settled.append(deg.where(~alive).select("url", F.col("url").alias("component")))
+    if rounds and n:
         # ONE rebuild for the whole fixpoint (round 4 paid one per layer)
-        e = (
-            e.join(b(remaining.select(F.col("url").alias("u"))), "u", "semi")
-            .join(b(remaining.select(F.col("url").alias("v"))), "v", "semi")
-            .repartition(num_partitions, "u")
-            .localCheckpoint(eager=True)
-        )
+        e = _rebuild(e, remaining, b, num_partitions)
         rebuilt = 1
     if metrics is not None:
         metrics.append(
             {"phase": "trim", "rounds": rounds, "edge_rebuilds": rebuilt}
         )
-    return remaining, e
+    return remaining, e, n
 
 
 def strongly_connected_components(
@@ -169,88 +191,59 @@ def strongly_connected_components(
     edge table at most once regardless of peel depth (pinned in
     tests/test_scc_bowtie.py on a 1000-vertex chain).
     """
-    spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
+    e, remaining, num_partitions, broadcast_labels = _setup(
+        edges, broadcast_labels, num_partitions
     )
-    e = (
-        _directed(edges)
-        .repartition(num_partitions, "u")
-        .localCheckpoint(eager=True)
-    )
-    remaining = (
-        e.select(F.col("u").alias("url"))
-        .union(e.select(F.col("v").alias("url")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if broadcast_labels is None:
-        broadcast_labels = resolve_broadcast(None, remaining.count())
 
     def b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_labels else df
 
+    def color(lbl: DataFrame, _k: int) -> DataFrame:
+        inc = (
+            e.join(b(lbl.select(F.col("url").alias("u"), "c")), "u")
+            .groupBy(F.col("v").alias("url"))
+            .agg(F.min("c").alias("_in"))
+        )
+        return lbl.join(inc, "url", "left").select(
+            "url",
+            F.least(F.col("c"), F.coalesce(F.col("_in"), F.col("c"))).alias("c"),
+            F.coalesce(F.col("_in") < F.col("c"), F.lit(False)).alias("_chg"),
+        )
+
     settled: list[DataFrame] = []
     for _ in range(max_rounds):
         # -- 1. trim: peel vertices missing an in- or out-edge -------------
-        remaining, e = _trim(e, remaining, b, num_partitions, settled, metrics)
-        if remaining.isEmpty():
+        remaining, e, n = _trim(e, remaining, b, num_partitions, settled, metrics)
+        if not n:
             break
 
         # -- 2. color: c(v) = min vertex id reaching v ----------------------
-        lbl = remaining.select(
-            "url", F.col("url").alias("c")
-        ).localCheckpoint(eager=True)
-        while True:
-            inc = (
-                e.join(b(lbl.select(F.col("url").alias("u"), "c")), "u")
-                .groupBy(F.col("v").alias("url"))
-                .agg(F.min("c").alias("_in"))
-            )
-            new = (
-                lbl.join(inc, "url", "left")
-                .select(
-                    "url",
-                    F.least(F.col("c"), F.coalesce(F.col("_in"), F.col("c"))).alias("c"),
-                    F.coalesce(F.col("_in") < F.col("c"), F.lit(False)).alias("_chg"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # ONE job per round: the probe aggregate materializes the lazy
-            # checkpoint and returns the convergence flag in the same action
-            changed = bool(
-                new.agg(F.max(F.col("_chg").cast("int")).alias("m")).first()["m"]
-            )
-            lbl = new.select("url", "c")
-            if not changed:
-                break
+        lbl = iterate(
+            "scc.color", remaining.select("url", F.col("url").alias("c")), color,
+            range(sys.maxsize), stats=[F.max(F.col("_chg").cast("int")).alias("m")],
+            project=lambda x, row, _k: (x.select("url", "c"), {"changed": bool(row["m"])}),
+            stop=lambda r: not r["changed"],
+        )
 
         # -- 3. settle: backward in-color sweep from the color roots --------
-        in_set = lbl.where(F.col("url") == F.col("c")).localCheckpoint(eager=True)
-        frontier = in_set
-        while True:
-            cand = (
-                e.join(frontier.select(F.col("url").alias("v"), "c"), "v")
-                .select(F.col("u").alias("url"), "c")
-                .distinct()
-                .join(b(lbl), ["url", "c"], "semi")  # stay inside the color
-                .join(b(in_set.select("url")), "url", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if cand.isEmpty():
-                break
-            in_set = in_set.union(cand).localCheckpoint(eager=True)
-            frontier = cand
-        settled.append(in_set.select("url", F.col("c").alias("component")))
-        remaining = remaining.join(b(in_set.select("url")), "url", "left_anti").localCheckpoint(eager=True)
-        if remaining.isEmpty():
-            break
-        e = (
-            e.join(b(remaining.select(F.col("url").alias("u"))), "u", "semi")
-            .join(b(remaining.select(F.col("url").alias("v"))), "v", "semi")
-            .repartition(num_partitions, "u")
-            .localCheckpoint(eager=True)
+        in_set, _ = sweep(
+            "scc.settle",
+            lbl.where(F.col("url") == F.col("c")),
+            lambda f: e.join(f.select(F.col("url").alias("v"), "c"), "v")
+            .select(F.col("u").alias("url"), "c")
+            .distinct()
+            .join(b(lbl), ["url", "c"], "semi"),  # stay inside the color
+            ["url"], None, settled=b,
         )
+        settled.append(in_set.select("url", F.col("c").alias("component")))
+        remaining, row = materialize(
+            remaining.join(b(in_set.select("url")), "url", "left_anti"),
+            [F.count(F.lit(1)).alias("n")],
+        )
+        release(lbl)
+        if not row["n"]:
+            break
+        e = _rebuild(e, remaining, b, num_partitions)
         if metrics is not None:
             metrics.append({"phase": "settle", "edge_rebuilds": 1})
     else:
@@ -259,33 +252,35 @@ def strongly_connected_components(
             "raise max_rounds (condensation depth exceeds the bound)"
         )
 
-    out = settled[0]
-    for part in settled[1:]:
-        out = out.unionByName(part)
-    return out.select("url", "component")
+    release(e)
+    return reduce(DataFrame.unionByName, settled).select("url", "component")
 
 
-def _reachable(e: DataFrame, seeds: DataFrame, bcast: bool) -> DataFrame:
+def _rebuild(e: DataFrame, remaining: DataFrame, b, num_partitions: int) -> DataFrame:
+    """The edges of ``e`` between ``remaining`` vertices, repartitioned and
+    checkpointed; ``e``'s blocks are released."""
+    out = (
+        e.join(b(remaining.select(F.col("url").alias("u"))), "u", "semi")
+        .join(b(remaining.select(F.col("url").alias("v"))), "v", "semi")
+        .repartition(num_partitions, "u")
+        .localCheckpoint(eager=True)
+    )
+    release(e)
+    return out
+
+
+def _reachable(e: DataFrame, seeds: DataFrame, b) -> DataFrame:
     """(url) — every vertex reachable from ``seeds`` along directed edges
-    (u, v), seeds included. Level-synchronous sweep (distance.py's shape)."""
-
-    def b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast else df
-
-    settled = seeds.select("url").distinct().localCheckpoint(eager=True)
-    frontier = settled
-    while not frontier.isEmpty():
-        frontier = (
-            e.join(frontier.select(F.col("url").alias("u")), "u")
-            .select(F.col("v").alias("url"))
-            .distinct()
-            .join(b(settled), "url", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if frontier.isEmpty():
-            break
-        settled = settled.union(frontier).localCheckpoint(eager=True)
-    return settled
+    (u, v), seeds included: a fixpoint.sweep (distance.py's shape)."""
+    x, _ = sweep(
+        "bowtie.reach",
+        seeds.select("url").distinct(),
+        lambda f: e.join(f.select(F.col("url").alias("u")), "u")
+        .select(F.col("v").alias("url"))
+        .distinct(),
+        ["url"], None, settled=b,
+    )
+    return x.select("url")
 
 
 def bowtie(
@@ -309,22 +304,12 @@ def bowtie(
     reused. The core-pick is a single TakeOrdered(1) on the
     component-count table (component-count-sized, one tiny driver scalar).
     """
-    spark = edges.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
+    e, verts, num_partitions, broadcast_labels = _setup(
+        edges, broadcast_labels, num_partitions
     )
-    e = _directed(edges).repartition(num_partitions, "u").localCheckpoint(eager=True)
     rev = e.select(F.col("v").alias("u"), F.col("u").alias("v")).repartition(
         num_partitions, "u"
     ).localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("u").alias("url"))
-        .union(e.select(F.col("v").alias("url")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if broadcast_labels is None:
-        broadcast_labels = resolve_broadcast(None, verts.count())
 
     def b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_labels else df
@@ -341,8 +326,8 @@ def bowtie(
     )
     core = scc.where(F.col("component") == F.lit(core_row["component"])).select("url")
 
-    fwd = _reachable(e, core, broadcast_labels)
-    bwd = _reachable(rev, core, broadcast_labels)
+    fwd = _reachable(e, core, b)
+    bwd = _reachable(rev, core, b)
     outs = fwd.join(b(core), "url", "left_anti").localCheckpoint(eager=True)
     ins = bwd.join(b(core), "url", "left_anti").localCheckpoint(eager=True)
     rest = (
@@ -351,26 +336,17 @@ def bowtie(
         .join(b(outs), "url", "left_anti")
         .localCheckpoint(eager=True)
     )
-    from_in = _reachable(e, ins, broadcast_labels).join(b(rest), "url", "semi")
-    to_out = _reachable(rev, outs, broadcast_labels).join(b(rest), "url", "semi")
-
-    def tag(df: DataFrame, part: str) -> DataFrame:
-        return df.select("url", F.lit(part).alias("part"))
-
+    from_in = _reachable(e, ins, b).join(b(rest), "url", "semi")
+    to_out = _reachable(rev, outs, b).join(b(rest), "url", "semi")
+    for done in (fwd, bwd, verts, e, rev):
+        release(done)
     tube = from_in.join(b(to_out), "url", "semi")
     tendril_in = from_in.join(b(to_out), "url", "left_anti")
     tendril_out = to_out.join(b(from_in), "url", "left_anti")
     disc = rest.join(b(from_in), "url", "left_anti").join(
         b(to_out), "url", "left_anti"
     )
-    out = tag(core, "CORE")
-    for df, part in (
-        (ins, "IN"),
-        (outs, "OUT"),
-        (tube, "TUBE"),
-        (tendril_in, "TENDRIL_IN"),
-        (tendril_out, "TENDRIL_OUT"),
-        (disc, "DISCONNECTED"),
-    ):
-        out = out.unionByName(tag(df, part))
-    return out.select("url", "part")
+    return reduce(DataFrame.unionByName, [
+        df.select("url", F.lit(part).alias("part"))
+        for df, part in zip((core, ins, outs, tube, tendril_in, tendril_out, disc), PARTS)
+    ])

@@ -30,8 +30,9 @@ Spark shape (per step, the same at 10^11 edges)
 
 Walks that reach a dangling vertex simply drop out of the join (the
 standard DeepWalk truncation). Lineage is cut with an eager
-``localCheckpoint`` every ``checkpoint_every`` steps, the same pattern as
-the pagerank fixpoint loop (operators/pagerank.py).
+``localCheckpoint`` every ``CHECKPOINT_EVERY`` steps. The steps run no
+other action, so they stay off plans/fixpoint.iterate (which would add
+one per step).
 """
 
 from __future__ import annotations
@@ -43,13 +44,14 @@ from pyspark.sql import functions as F
 
 from pagerank_spark.operators.textops import hexint15
 
+CHECKPOINT_EVERY = 8
+
 
 def random_walks(
     edges: DataFrame,
     walk_length: int,
     walks_per_vertex: int = 1,
     starts: DataFrame | None = None,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """(walk_id, step, url) rows for deterministic uniform random walks.
 
@@ -83,7 +85,7 @@ def random_walks(
             hexint15(F.concat(F.col("walk_id"), F.lit(f"|{t}|"), F.col("dst"))).alias("_h"),
         )
         state = cand.groupBy("walk_id").agg(F.min_by("dst", "_h").alias("url"))
-        if t % checkpoint_every == 0 and t < walk_length:
+        if t % CHECKPOINT_EVERY == 0 and t < walk_length:
             state = state.localCheckpoint(eager=True)
         steps.append(state.withColumn("step", F.lit(t).cast("int")))
     out = reduce(DataFrame.unionByName, steps)
@@ -96,7 +98,6 @@ def weighted_random_walks(
     walks_per_vertex: int = 1,
     starts: DataFrame | None = None,
     weight_col: str = "weight",
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """(walk_id, step, url) — deterministic WEIGHTED random walks: step
     ``t`` of walk ``w`` at vertex ``u`` moves to
@@ -150,7 +151,7 @@ def weighted_random_walks(
             "walk_id", F.col("dst"), key.alias("_k")
         )
         state = cand.groupBy("walk_id").agg(F.min_by("dst", "_k").alias("url"))
-        if t % checkpoint_every == 0 and t < walk_length:
+        if t % CHECKPOINT_EVERY == 0 and t < walk_length:
             state = state.localCheckpoint(eager=True)
         steps.append(state.withColumn("step", F.lit(t).cast("int")))
     out = reduce(DataFrame.unionByName, steps)
@@ -165,7 +166,6 @@ def node2vec_walks(
     walks_per_vertex: int = 1,
     starts: DataFrame | None = None,
     weight_col: str = "weight",
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """(walk_id, step, url) — deterministic node2vec second-order biased
     walks (Grover & Leskovec, KDD'16). Step 1 is the plain weighted draw
@@ -260,7 +260,7 @@ def node2vec_walks(
             .agg(F.min_by("dst", "_k").alias("url"))
             .select("walk_id", "url", F.col("_cur").alias("prev"))
         )
-        if t % checkpoint_every == 0 and t < walk_length:
+        if t % CHECKPOINT_EVERY == 0 and t < walk_length:
             state = state.localCheckpoint(eager=True)
         steps.append(
             state.select("walk_id", "url").withColumn("step", F.lit(t).cast("int"))

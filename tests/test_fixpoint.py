@@ -1,7 +1,9 @@
-"""The round driver (plans/fixpoint.py): round tags, stop rule, records."""
+"""The round driver (plans/fixpoint.py): round tags, stop rule, records,
+release of the rounds it checkpointed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark import TaskContext
 from pyspark.sql import functions as F
 
@@ -38,3 +40,47 @@ def test_round_action_runs_under_its_tag_inside_the_caller_group(spark):
     assert all(m["wall_s"] > 0 for m in metrics)
     # the rounds' jobs belong to the caller's group
     assert len(sc.statusTracker().getJobIdsForGroup("fixpoint-caller")) >= 3
+
+
+def _persistent(sc) -> set:
+    return set(sc._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("lazy", [False, True], ids=["eager", "lazy"])
+def test_driver_releases_the_rounds_it_checkpointed(spark, lazy):
+    # the checkpoint blocks the driver makes are released once the next
+    # round is materialized, so what a run leaves persisted does not grow
+    # with its round count; the caller's own checkpoint survives
+    sc = spark.sparkContext
+    x0 = spark.range(16).localCheckpoint(eager=True)
+    # counted as new persistent RDD ids, so the ContextCleaner dropping
+    # earlier tests' frames meanwhile does not skew it
+    left, runs = {}, {}
+    for n in (2, 8):
+        before = _persistent(sc)
+        runs[n] = iterate("release", x0, lambda x, _k: x.withColumn("id", F.col("id") + 1),
+                          range(n), stats=[F.max("id")] if lazy else None)
+        assert runs[n].agg(F.max("id")).first()[0] == 15 + n
+        left[n] = len(_persistent(sc) - before)
+    assert left[8] == left[2], left
+    assert x0.count() == 16
+
+
+def test_driver_keeps_the_rounds_the_state_reads(spark):
+    # a state that unions every round's checkpoint (sweep's levels,
+    # hyperball's rounds) keeps them all readable; only the round that is
+    # no longer read is released
+    sc = spark.sparkContext
+    hist = None
+
+    def step(x, k):
+        nonlocal hist
+        hist = x
+        return x.where(F.col("k") == k - 1).select((F.col("id") + 1).alias("id"))
+
+    before = _persistent(sc)
+    x = iterate("history", spark.range(4).withColumn("k", F.lit(0)), step, range(1, 6),
+                project=lambda ck, _s, k: (hist.unionByName(ck.withColumn("k", F.lit(k))), None))
+    assert len(_persistent(sc) - before) == 5
+    sums = x.groupBy("k").agg(F.sum("id")).collect()
+    assert sorted(sums) == [(k, 6 + 4 * k) for k in range(6)]

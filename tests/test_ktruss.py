@@ -31,16 +31,19 @@ def test_k4_needs_two_triangles_per_edge(spark):
 
 
 def test_triangle_strip_cascades_to_empty(spark):
-    # a strip of triangles p0-p1-p2-...-p9 (edges (i,i+1) and (i,i+2)):
-    # interior edges have support 2 but the strip ENDS have support 1, so
-    # k=4 unravels it end-to-in over multiple rounds — the cascade, not
-    # just the first filter, must drive the fixpoint
-    strip = [(f"p{i}", f"p{i+1}") for i in range(9)] + [
-        (f"p{i}", f"p{i+2}") for i in range(8)
-    ]
-    assert k_truss(_edges(spark, strip), k=4).count() == 0
+    # a triangulated cylinder of six 4-rings: every edge but the end rings'
+    # closes 2 triangles, so k=4 peels the end rings first and unravels the
+    # cylinder from both ends over six rounds — the cascade, not just the
+    # first filter, must drive the fixpoint
+    cyl = [(f"c{r}{j}", f"c{r}{(j + 1) % 4}") for r in range(6) for j in range(4)]
+    cyl += [(f"c{r}{j}", f"c{r + 1}{(j + d) % 4}")
+            for r in range(5) for j in range(4) for d in (0, 1)]
+    assert k_truss(_edges(spark, cyl), k=4).count() == 0
+    # more than 2 rounds ran
+    with pytest.raises(RuntimeError):
+        k_truss(_edges(spark, cyl), k=4, max_rounds=2)
     # ...while k=3 keeps every edge that is in ANY triangle (all of them)
-    assert k_truss(_edges(spark, strip), k=3).count() == len(strip)
+    assert k_truss(_edges(spark, cyl), k=3).count() == len(cyl)
 
 
 def test_duplicate_and_self_edges_collapse(spark):

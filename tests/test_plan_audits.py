@@ -169,9 +169,16 @@ def test_pagerank_job_budget(spark, golden_graph, method, max_overhead):
 def _round_budget_cases():
     from pagerank_spark.operators.coloring import greedy_coloring
     from pagerank_spark.operators.components import connected_components
+    from pagerank_spark.operators.distance import (
+        betweenness_sample,
+        link_distance,
+        multi_source_distance,
+        nearest_seed,
+    )
     from pagerank_spark.operators.eigencentrality import eigenvector_centrality
     from pagerank_spark.operators.featprop import feature_propagation
     from pagerank_spark.operators.hits import hits
+    from pagerank_spark.operators.hyperball import hyperball
     from pagerank_spark.operators.katz import katz_centrality
     from pagerank_spark.operators.kcore import core_numbers, k_core
     from pagerank_spark.operators.ktruss import k_truss
@@ -197,7 +204,10 @@ def _round_budget_cases():
     # budget; the job counts before the round driver were components 9,
     # both labelprop modes 7, seeded 6, katz 4, eigenvector 9, hits 6.5 per
     # half-round, k_core 5, core_numbers 13, k_truss 15.5-16, coloring
-    # 17.5-18.5, mis 18, redirects 6, wl 10-11, featprop 5
+    # 17.5-18.5, mis 18, redirects 6, wl 10-11, featprop 5; the BFS levels
+    # before the frontier sweep: link_distance 8-8.5, nearest_seed 7,
+    # multi_source_distance 8, betweenness 16 (a forward and a backward
+    # level), hyperball 3
     return [
         pytest.param("components", components, 9, id="components"),
         # disjoint pairs swap labels every round, so both stop modes run k
@@ -233,6 +243,18 @@ def _round_budget_cases():
             g["path"], rounds=k).count(), 11.5, id="wl"),
         pytest.param("featprop", lambda g, k: feature_propagation(
             g["path"], g["features"], rounds=k).count(), 5, id="featprop"),
+        # both seeds reach a new vertex at every one of the k levels; like
+        # the parent, link_distance reads 8 or 8.5 with AQE's plan choices
+        pytest.param("link_distance", lambda g, k: link_distance(
+            g["path"], g["seeds"], max_depth=k).count(), 8.5, id="link_distance"),
+        pytest.param("nearest_seed", lambda g, k: nearest_seed(
+            g["path"], g["seeds"], max_depth=k).count(), 7, id="nearest_seed"),
+        pytest.param("multi_source_distance", lambda g, k: multi_source_distance(
+            g["path"], g["seeds"], max_depth=k).count(), 8, id="multi_source_distance"),
+        pytest.param("betweenness", lambda g, k: betweenness_sample(
+            g["path"], g["seeds"], max_depth=k).count(), 16, id="betweenness"),
+        pytest.param("hyperball", lambda g, k: hyperball(
+            g["path"], rounds=k).count(), 3, id="hyperball"),
     ]
 
 
@@ -1232,16 +1254,24 @@ def test_linear_classifier_broadcast_model_one_rollup_exchange(spark, docs_path)
 
 def test_core_numbers_histogram_window_is_vertex_partitioned(spark):
     # the h-index window must partition by vertex (tiny per-vertex
-    # histogram groups), never a global single-partition sort
-    from pagerank_spark.operators.kcore import core_numbers
+    # histogram groups), never a global single-partition sort; audited on
+    # a first and a frontier round's plan
+    from pyspark.sql import functions as F
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], ["src", "dst"]
+    from pagerank_spark.operators.kcore import _coreness_round
+
+    adj = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("c", "a"), ("a", "c")],
+        ["u", "v"],
     )
-    out = core_numbers(edges)
-    plan = _physical(out)
-    assert "SinglePartition" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+    x = spark.createDataFrame([("a", 2), ("b", 2), ("c", 2)], ["v", "c"]).withColumn(
+        "chg", F.lit(True)
+    )
+    for k in (0, 1):
+        plan = _physical(_coreness_round(adj, x, k, lambda df: df))
+        assert "Window" in plan, plan
+        assert "SinglePartition" not in plan, plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
 
 
 def test_script_profile_zero_shuffle_zero_python(spark, docs_path):
