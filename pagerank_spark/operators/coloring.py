@@ -42,7 +42,9 @@ DISTINCT colors (a 10^7-degree hub holds a handful of colors, not 10^7
 rows), and conflict detection is one adjacency join against the
 (vertex-sized, materialized) picks table. The vertex-sized sides of the
 adjacency joins broadcast under kcore._broadcaster's vertex-count policy,
-so the joins leave the adjacency in place.
+so the joins leave the adjacency in place. Each round's picks checkpoint
+is released once the round's state is materialized, the adjacency and
+initial-state checkpoints after the last round.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ from pyspark.sql import functions as F
 
 from pagerank_spark.operators.kcore import _broadcaster, _undirect
 from pagerank_spark.operators.textops import hexint15
-from pagerank_spark.plans.fixpoint import iterate, materialize
+from pagerank_spark.plans.fixpoint import iterate, materialize, release
 
 
 def _priority(col: str):
@@ -76,13 +78,15 @@ def greedy_coloring(
     _, adj, verts = _undirect(edges, src_col, dst_col, extra_vertices)
     adj = adj.localCheckpoint(eager=True)
     uncolored = [F.count_if(F.col("color").isNull()).alias("n")]
-    state, row = materialize(
+    state0, row = materialize(
         verts.select("url", F.lit(None).cast("int").alias("color")), uncolored
     )
     bc = _broadcaster(row["n"])
+    picks = None
     mex = F.expr("filter(sequence(0, size(_cs)), x -> NOT array_contains(_cs, x))[0]")
 
     def step(state: DataFrame, _k: int) -> DataFrame:
+        nonlocal picks
         unc = state.where(F.col("color").isNull()).select("url")
         # speculative pick: mex over the COLORED neighborhood, for every
         # uncolored vertex at once
@@ -131,8 +135,14 @@ def greedy_coloring(
             "url", F.coalesce(F.col("color"), F.col("_pick")).alias("color")
         )
 
-    return iterate(
-        "greedy_coloring", state, step, range(max_rounds), stats=uncolored,
-        project=lambda state, row, _k: (state, {"uncolored": row["n"]}),
-        stop=lambda r: r["uncolored"] == 0, strict=True,
+    def project(state: DataFrame, row, _k: int):
+        release(picks, keep=state)  # the round's state is materialized
+        return state, {"uncolored": row["n"]}
+
+    out = iterate(
+        "greedy_coloring", state0, step, range(max_rounds), stats=uncolored,
+        project=project, stop=lambda r: r["uncolored"] == 0, strict=True,
     )
+    release(adj)
+    release(state0, keep=out)
+    return out

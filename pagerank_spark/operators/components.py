@@ -17,34 +17,24 @@ edge-set fingerprint that decides convergence.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.kcore import _broadcaster, _undirect
 from pagerank_spark.plans.fixpoint import iterate, materialize, release
 
 
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Undirected pairs oriented (u=hi, v=lo), self-loops dropped, distinct."""
-    return (
-        edges.select(
-            F.greatest(F.col("src"), F.col("dst")).alias("u"),
-            F.least(F.col("src"), F.col("dst")).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _large_star(e: DataFrame, bcast: bool = False) -> DataFrame:
-    """Input/output: undirected pairs. Symmetrizes internally."""
+def _large_star(e: DataFrame, bc: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """Input/output: undirected pairs. Symmetrizes internally. ``bc``: the
+    broadcast policy of the vertex-sized min table (``kcore._broadcaster``),
+    which keeps the edge table in place."""
     both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = both.groupBy("u").agg(F.min("v").alias("_mv"))
-    # mins is vertex-sized — broadcast keeps the edge table in place
-    if bcast:
-        mins = F.broadcast(mins)
     m = F.least(F.col("_mv"), F.col("u"))
     return (
-        both.join(mins, "u")
+        both.join(bc(mins), "u")
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), m.alias("v"))   # u=hi, v=lo preserved
         .where(F.col("u") != F.col("v"))
@@ -52,12 +42,10 @@ def _large_star(e: DataFrame, bcast: bool = False) -> DataFrame:
     )
 
 
-def _small_star(e: DataFrame, bcast: bool = False) -> DataFrame:
+def _small_star(e: DataFrame, bc: Callable[[DataFrame], DataFrame]) -> DataFrame:
     """Input: undirected (hi, lo) pairs; output the same orientation."""
     lo = e  # already oriented u > v
-    mins = lo.groupBy("u").agg(F.min("v").alias("_mv"))
-    if bcast:
-        mins = F.broadcast(mins)
+    mins = bc(lo.groupBy("u").agg(F.min("v").alias("_mv")))
     via_nbrs = (
         lo.join(mins, "u")
         .where(F.col("v") != F.col("_mv"))
@@ -75,7 +63,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     num_partitions: int | None = None,
-    broadcast_mins: bool | None = None,
 ) -> DataFrame:
     """Return (url, component) — component id = min vertex id in the component.
 
@@ -84,10 +71,10 @@ def connected_components(
     ``max_iterations`` rounds; ``bipartite_check`` and
     ``incremental_components`` inherit the raise.
 
-    ``broadcast_mins``: the per-vertex min table is vertex-sized; broadcast
-    it (auto when < 10M vertices) so each star round shuffles only the
-    contracted edge output, not the full neighbor table. False at cluster
-    scale -> co-partitioned shuffle joins.
+    The per-vertex min table is vertex-sized; it broadcasts under
+    resolve_broadcast's vertex-count policy (``kcore._broadcaster``), so
+    each star round shuffles only the contracted edge output, not the full
+    neighbor table; at cluster scale the joins are co-partitioned shuffles.
     """
     spark = edges.sparkSession
     num_partitions = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -97,8 +84,7 @@ def connected_components(
         .distinct()
         .persist()
     )
-    if broadcast_mins is None:
-        broadcast_mins = all_vertices.count() < 10_000_000
+    bc = _broadcaster(all_vertices.count())
     # the edge set is distinct, so (count, sum of per-row hashes) is an
     # order-insensitive set fingerprint; equality <=> same set up to a
     # 2^-64 collision. It is each round's one action, which also
@@ -108,7 +94,13 @@ def connected_components(
         # decimal(38,0) accumulator: exact, no int64 overflow under ANSI
         F.sum(F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")).alias("h"),
     ]
-    e, sig = materialize(_canonical(edges).repartition(num_partitions, "u"), signature)
+    # the simple undirected pairs oriented (u=hi, v=lo)
+    und = _undirect(edges, "src", "dst")[0]
+    e, sig = materialize(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+        .repartition(num_partitions, "u"),
+        signature,
+    )
 
     def project(e2: DataFrame, sig2, _k: int):
         nonlocal sig
@@ -118,7 +110,7 @@ def connected_components(
     try:
         e = iterate(
             "connected_components", e,
-            lambda e, _k: _small_star(_large_star(e, broadcast_mins), broadcast_mins)
+            lambda e, _k: _small_star(_large_star(e, bc), bc)
             .repartition(num_partitions, "u"),
             range(max_iterations), stats=signature, project=project,
             stop=lambda r: not r["changed"], strict=True,
@@ -158,14 +150,14 @@ def bipartite_check(
     in vertex names (cover ids are ``url||sep||side``).
     """
     orig = connected_components(edges, max_iterations=max_iterations)
-    und = _canonical(edges)
+    und = _undirect(edges, "src", "dst")[0]
     cover = und.select(
-        F.concat(F.col("u"), F.lit(sep + "0")).alias("src"),
-        F.concat(F.col("v"), F.lit(sep + "1")).alias("dst"),
+        F.concat(F.col("a"), F.lit(sep + "0")).alias("src"),
+        F.concat(F.col("b"), F.lit(sep + "1")).alias("dst"),
     ).unionAll(
         und.select(
-            F.concat(F.col("u"), F.lit(sep + "1")).alias("src"),
-            F.concat(F.col("v"), F.lit(sep + "0")).alias("dst"),
+            F.concat(F.col("a"), F.lit(sep + "1")).alias("src"),
+            F.concat(F.col("b"), F.lit(sep + "0")).alias("dst"),
         )
     )
     cov = connected_components(cover, max_iterations=max_iterations)

@@ -7,10 +7,12 @@ These are the standard first-look reports over a crawled link graph
 feeds exactly these kinds of sanity reports before ranking). All three are
 pure DataFrame compositions:
 
-- ``clustering_coefficients`` reuses the degree-ordered triangle counter
-  (triangles.py) — the wedge explosion on power-law graphs is already tamed
-  there by low-(degree,id) orientation — and adds one vertex-sized join, so
-  its scale ceiling is the triangle count itself.
+- ``clustering_coefficients`` is one per-vertex run of the degree-ordered
+  triangle counter (triangles.py) — the wedge explosion on power-law
+  graphs is already tamed there by low-(degree,id) orientation — plus a
+  projection: it runs exactly that count's Spark jobs (pinned in
+  tests/test_plan_audits.py), so its scale ceiling is the triangle count
+  itself.
 - ``graph_summary`` is a handful of map-side-combined aggregates plus one
   int-keyed LEFT SEMI self-join for reciprocity; every intermediate is
   either edge-shaped (one pass) or a single row.
@@ -18,6 +20,9 @@ pure DataFrame compositions:
   (``conv(d, 10, 2)``), not ``floor(log2(d))`` — exact integer math that
   DuckDB's ``bin()`` reproduces bit-for-bit, immune to the
   ln(8)/ln(2) = 2.999… float trap. Output is O(log max-degree) rows.
+
+``rich_club`` reads the simple undirected graph of ``kcore._undirect``
+and its degree table (``kcore._degree``), like the triangle counter.
 """
 
 from __future__ import annotations
@@ -25,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.triangles import _undirected, triangle_count
+from pagerank_spark.operators.kcore import _degree, _undirect
+from pagerank_spark.operators.triangles import triangle_count
 from pagerank_spark.plans.caching import checkpoint_release, collect_release
 
 
@@ -458,17 +464,11 @@ def rich_club(edges: DataFrame, ks: list[int] = (2, 4, 8, 16)) -> DataFrame:
     handful; each pass is edge-shaped with the degree table broadcast by
     the planner when it fits).
     """
-    und = _undirected(edges).persist()
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
-    )
+    und = _undirect(edges, "src", "dst")[0].persist()
+    deg = _degree(und).persist()
     rows = None
     for k in ks:
-        rich = deg.where(F.col("d") > k).select("v")
+        rich = deg.where(F.col("d") > k).select(F.col("x").alias("v"))
         nk = rich.agg(F.count(F.lit(1)).alias("n_k"))
         ek = (
             und.join(rich.withColumnRenamed("v", "a"), "a", "left_semi")

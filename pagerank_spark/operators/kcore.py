@@ -44,9 +44,11 @@ def _undirect(
     (a, b) edges with a < b, ``adj`` both directions as (u, v) rows, and
     ``verts`` the (url,) vertex set plus ``extra_vertices``. All lazy."""
     s, d = F.col(src_col), F.col(dst_col)
+    # the self-loop filter on a, b (not src, dst) lets the a, b not-null
+    # constraint reach the joins downstream of a checkpoint of ``und``
     und = (
-        edges.where(s != d)
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+        edges.select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+        .where(F.col("b") != F.col("a"))
         .distinct()
     )
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
@@ -56,6 +58,16 @@ def _undirect(
     if extra_vertices is not None:
         verts = verts.union(extra_vertices.select("url"))
     return und, adj, verts.distinct()
+
+
+def _degree(und: DataFrame) -> DataFrame:
+    """(x, d): the degree of every vertex of the (a, b) edge set ``und``."""
+    return (
+        und.select(F.col("a").alias("x"))
+        .unionAll(und.select(F.col("b").alias("x")))
+        .groupBy("x")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
 
 
 def _broadcaster(
@@ -128,14 +140,8 @@ def k_core(
         raise ValueError("k_core needs k >= 1")
 
     def step(cur: DataFrame, n_edges: int) -> DataFrame:
-        deg = (
-            cur.select(F.col("a").alias("v"))
-            .unionAll(cur.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("_d"))
-        )
         good = _broadcaster(2 * n_edges, broadcast_vertices, broadcast_threshold)(
-            deg.where(F.col("_d") >= k).select("v")
+            _degree(cur).where(F.col("d") >= k).select(F.col("x").alias("v"))
         )
         return cur.join(good.withColumnRenamed("v", "a"), "a", "left_semi").join(
             good.withColumnRenamed("v", "b"), "b", "left_semi"

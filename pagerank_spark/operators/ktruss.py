@@ -12,9 +12,10 @@ clusters from nav-template link meshes that the in-link-ratio filter
 (reference pagerank.py:52-57) only heuristically removes.
 
 Scale shape per round: one degree-ordered triangle enumeration over the
-surviving edge set (Suri-Vassilvitskii orientation — the same wedge-join
-bound as operators/triangles.py, hub out-degree capped at O(sqrt m)), one
-edge-keyed partial-aggregated support count, one left join + filter.
+surviving edge set — triangle_count's own orientation and closure
+(``triangles._orient``/``_close``, hub out-degree capped at O(sqrt m)),
+with an unbroadcast degree join — one edge-keyed partial-aggregated
+support count, one left join + filter.
 Rounds are O(peeling depth) and run on k_core's peel loop
 (kcore._peel over plans/fixpoint.iterate): each round's one action is the
 surviving-edge count over the round's lazy localCheckpoint. The DuckDB
@@ -27,38 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.kcore import _peel, _undirect
+from pagerank_spark.operators.kcore import _degree, _peel, _undirect
+from pagerank_spark.operators.triangles import _close, _orient
 
 
 def _edge_support(cur: DataFrame) -> DataFrame:
     """(a, b, support) for every edge of the undirected simple edge set
-    ``cur`` that closes at least one triangle — degree-ordered wedge join,
-    each triangle emits its three normalized edge keys once."""
-    deg = (
-        cur.select(F.col("a").alias("x"))
-        .unionAll(cur.select(F.col("b").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    e = cur.join(
-        deg.withColumnRenamed("x", "a").withColumnRenamed("d", "da"), "a"
-    ).join(deg.withColumnRenamed("x", "b").withColumnRenamed("d", "db"), "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    o = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    )
-    e1 = o.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
-    e2 = o.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
-    wedges = e1.join(e2, "u").where(
-        (F.col("d1") < F.col("d2"))
-        | ((F.col("d1") == F.col("d2")) & (F.col("v1") < F.col("v2")))
-    )
-    closing = o.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
+    ``cur`` that closes at least one triangle: each triangle that
+    triangles._close finds emits its three normalized edge keys once."""
+    tris = _close(_orient(cur, _degree(cur)))
     sides = (
         tris.select(F.col("u").alias("x"), F.col("v1").alias("y"))
         .unionAll(tris.select(F.col("u").alias("x"), F.col("v2").alias("y")))

@@ -1,15 +1,20 @@
 """Link prediction / co-reference analytics over the link graph:
-co-citation counts (Small 1973) and Adamic-Adar common-neighbor scores
-(Adamic & Adar 2003).
+co-citation and bibliographic coupling counts (Small 1973, Kessler 1963),
+Adamic-Adar common-neighbor scores (Adamic & Adar 2003) and neighborhood
+Jaccard similarity.
 
-Both operators are wedge self-joins, which on a power-law web graph explode
-quadratically at hub vertices — so both take an explicit DEGREE CAP and
-drop high-degree wedge CENTERS entirely rather than sampling them. That is
-the standard web-IR treatment (a page citing 10^5 others contributes no
-co-citation signal, and a vertex with 10^5 neighbors adds ~1/ln(10^5) ≈ 0.09
-to 10^10 pairs — pure noise at quadratic cost). The cap makes the shuffle
-volume O(E · cap) worst-case instead of O(Σ d²), and the residual skew
-inside the cap is within AQE skew-join range.
+All four pair the neighbors of a wedge CENTER in one self-join
+(``triangles._wedges``), which on a power-law web graph explodes
+quadratically at hub vertices — so each takes an explicit DEGREE CAP and
+the join drops high-degree centers entirely rather than sampling them.
+That is the standard web-IR treatment (a page citing 10^5 others
+contributes no co-citation signal, and a vertex with 10^5 neighbors adds
+~1/ln(10^5) ≈ 0.09 to 10^10 pairs — pure noise at quadratic cost). The cap
+makes the shuffle volume O(E · cap) worst-case instead of O(Σ d²), and the
+residual skew inside the cap is within AQE skew-join range. Co-citation
+centers on the citing page over the distinct directed edges (coupling on
+the cited page); Adamic-Adar and Jaccard center on the common neighbor of
+the undirected simple graph of ``kcore._undirect``.
 
 Cross-engine float hygiene: the Adamic-Adar sum is accumulated in
 DECIMAL(28,9) over per-term ROUND(1/ln(d), 9) quantities — decimal addition
@@ -23,11 +28,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.triangles import _undirected
+from pagerank_spark.operators.kcore import _degree, _undirect
+from pagerank_spark.operators.triangles import _wedges
 from pagerank_spark.plans.caching import checkpoint_release
 
 # Wedge centers above this degree are dropped (see module docstring).
 DEFAULT_DEGREE_CAP = 256
+
+
+def _centres(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(und, deg, nbrs)`` of the undirected simple graph underlying
+    ``edges``: the persisted (a, b) edge set, its (x, d) degree table and
+    the (z, v, d) neighbour rows ``_wedges`` pairs."""
+    und, adj, _ = _undirect(edges, "src", "dst")
+    und.persist()
+    deg = _degree(und)
+    nbrs = adj.join(deg.select(F.col("x").alias("u"), "d"), "u")
+    return und, deg, nbrs.select(F.col("u").alias("z"), "v", "d")
 
 
 def cocitation(
@@ -50,13 +67,10 @@ def cocitation(
         .distinct()
         .persist()
     )
-    od = de.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    kept = de.join(od.where(F.col("od") <= max_citing_outdeg), "src")
-    left = kept.select("src", F.col("dst").alias("a"))
-    right = kept.select("src", F.col("dst").alias("b"))
+    od = de.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    nbrs = de.join(od, "src").select(F.col("src").alias("z"), F.col("dst").alias("v"), "d")
     pairs = (
-        left.join(right, "src")
-        .where(F.col("a") < F.col("b"))
+        _wedges(nbrs, max_citing_outdeg)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("cocitations"))
         .where(F.col("cocitations") >= min_count)
@@ -82,26 +96,17 @@ def adamic_adar(
     DECIMAL so the score is bit-stable across engines and partitionings;
     the emitted double is rounded to 6 dp like every float in the contract.
 
-    deg(z) >= 2 holds for every wedge center by construction, so 1/ln(deg)
-    is always finite.
+    A centre of a pair a < b has degree >= 2, so 1/ln(deg) is always
+    finite.
     """
-    und = _undirected(edges).persist()
-    nbrs = und.select(F.col("a").alias("z"), F.col("b").alias("v")).union(
-        und.select(F.col("b").alias("z"), F.col("a").alias("v"))
-    )
-    deg = nbrs.groupBy("z").agg(F.count(F.lit(1)).alias("d"))
-    centers = nbrs.join(
-        deg.where((F.col("d") >= 2) & (F.col("d") <= max_center_degree)), "z"
-    )
+    und, _, nbrs = _centres(edges)
     term = F.round(F.lit(1.0) / F.log(F.col("d")), 9).cast("decimal(28,9)")
-    w1 = centers.select("z", F.col("v").alias("a"), term.alias("t"))
-    w2 = centers.select("z", F.col("v").alias("b"))
-    wedges = w1.join(w2, "z").where(F.col("a") < F.col("b"))
     scored = (
-        wedges.groupBy("a", "b")
+        _wedges(nbrs, max_center_degree)
+        .groupBy("a", "b")
         .agg(
             F.count(F.lit(1)).cast("long").alias("common_neighbors"),
-            F.sum("t").alias("aa_dec"),
+            F.sum(term).alias("aa_dec"),
         )
         .where(F.col("common_neighbors") >= min_common)
     )
@@ -136,28 +141,20 @@ def neighbor_jaccard(
     pairs of noise); the cap makes ``common`` a lower bound for pairs whose
     shared neighbors include dropped hubs — the DuckDB twin applies the
     identical cap. Degrees deg_a/deg_b are UNCAPPED (exact neighborhood
-    sizes). The ratio is a single IEEE division of exact integers — no sum
-    ordering — so ROUND(.,6) is bit-stable across engines.
+    sizes), read from the same degree table as the centres' degrees. The
+    ratio is a single IEEE division of exact integers — no sum ordering —
+    so ROUND(.,6) is bit-stable across engines.
     """
-    und = _undirected(edges).persist()
-    nbrs = und.select(F.col("a").alias("z"), F.col("b").alias("v")).union(
-        und.select(F.col("b").alias("z"), F.col("a").alias("v"))
-    )
-    deg = nbrs.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    cdeg = nbrs.groupBy("z").agg(F.count(F.lit(1)).alias("zd"))
-    centers = nbrs.join(cdeg.where(F.col("zd") <= max_center_degree), "z")
-    w1 = centers.select("z", F.col("v").alias("a"))
-    w2 = centers.select("z", F.col("v").alias("b"))
+    und, deg, nbrs = _centres(edges)
     common = (
-        w1.join(w2, "z")
-        .where(F.col("a") < F.col("b"))
+        _wedges(nbrs, max_center_degree)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
         .where(F.col("common_neighbors") >= min_common)
     )
     out = (
-        common.join(deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a")), "a")
-        .join(deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b")), "b")
+        common.join(deg.select(F.col("x").alias("a"), F.col("d").alias("deg_a")), "a")
+        .join(deg.select(F.col("x").alias("b"), F.col("d").alias("deg_b")), "b")
         .select(
             "a",
             "b",

@@ -28,7 +28,9 @@ TRUE, and a winner's neighbors leave it; the round's one action is the
 remaining count over its lazy localCheckpoint, plus one eager checkpoint
 of the winners table that the round reads twice. The vertex-sized sides
 of the adjacency joins broadcast under kcore._broadcaster's vertex-count
-policy, so the joins leave the adjacency in place.
+policy, so the joins leave the adjacency in place. Each round's winners
+checkpoint is released once the round's state is materialized, the
+adjacency and initial-state checkpoints after the last round.
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from pyspark.sql import functions as F
 
 from pagerank_spark.operators.kcore import _broadcaster, _undirect
 from pagerank_spark.operators.textops import hexint15
-from pagerank_spark.plans.fixpoint import iterate, materialize
+from pagerank_spark.plans.fixpoint import iterate, materialize, release
 
 
 def _priority(col: str):
@@ -64,12 +66,14 @@ def maximal_independent_set(
     _, adj, verts = _undirect(edges, src_col, dst_col, extra_vertices)
     adj = adj.localCheckpoint(eager=True)
     remaining = [F.count_if(F.col("won").isNull()).alias("n")]
-    state, row = materialize(
+    state0, row = materialize(
         verts.select("url", F.lit(None).cast("boolean").alias("won")), remaining
     )
     bc = _broadcaster(row["n"])
+    winners = None
 
     def step(state: DataFrame, _k: int) -> DataFrame:
+        nonlocal winners
         rem = state.where(F.col("won").isNull()).select("url")
         cur_adj = adj.join(
             bc(rem.withColumnRenamed("url", "u")), "u", "left_semi"
@@ -93,10 +97,15 @@ def maximal_independent_set(
             .select("url", F.coalesce(F.col("won"), F.col("_w")).alias("won"))
         )
 
+    def project(state: DataFrame, row, _k: int):
+        release(winners, keep=state)  # the round's state is materialized
+        return state, {"remaining": row["n"]}
+
     state = iterate(
-        "maximal_independent_set", state, step, range(max_rounds),
-        stats=remaining,
-        project=lambda state, row, _k: (state, {"remaining": row["n"]}),
-        stop=lambda r: r["remaining"] == 0, strict=True,
+        "maximal_independent_set", state0, step, range(max_rounds),
+        stats=remaining, project=project, stop=lambda r: r["remaining"] == 0,
+        strict=True,
     )
+    release(adj)
+    release(state0, keep=state)
     return state.where(F.col("won")).select("url")

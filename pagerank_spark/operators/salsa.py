@@ -36,13 +36,12 @@ from pyspark.sql import functions as F
 from pagerank_spark.operators.components import connected_components
 
 
-def salsa(edges: DataFrame, broadcast_mins: bool | None = None) -> DataFrame:
+def salsa(edges: DataFrame) -> DataFrame:
     """(url, hub, authority) SALSA scores over a (src, dst) edge table.
 
     Scores are each a probability distribution (hub over all pages that
     link out, authority over all pages linked to); pages on only one side
-    score 0.0 on the other. ``broadcast_mins`` forwards to the components
-    star-contraction (None = the shared 10M auto-policy).
+    score 0.0 on the other.
     """
     e = (
         edges.select(F.col("src").cast("string"), F.col("dst").cast("string"))
@@ -53,7 +52,7 @@ def salsa(edges: DataFrame, broadcast_mins: bool | None = None) -> DataFrame:
         F.concat(F.lit("h:"), F.col("src")).alias("src"),
         F.concat(F.lit("a:"), F.col("dst")).alias("dst"),
     )
-    comp = connected_components(bip, broadcast_mins=broadcast_mins)
+    comp = connected_components(bip)
 
     def side(prefix: str, deg_of: str, out_name: str) -> DataFrame:
         deg = (

@@ -1,12 +1,15 @@
 """Degree-ordered triangle counting (Suri & Vassilvitskii, WWW 2011 /
-Schank's compact-forward).
+Schank's compact-forward), and the wedge joins of the triangle and
+common-neighbour family.
 
 Orient each undirected edge from the lower-(degree, id) endpoint to the
-higher; every triangle is then counted exactly once as a wedge at its
-lowest-rank vertex closed by an oriented edge. Degree-ordering caps the
+higher (``_orient``); every triangle is then closed exactly once as a
+wedge at its lowest-rank vertex by an oriented edge (``_close``; k_truss
+counts its edge support on the same two). Degree-ordering caps the
 out-degree of hub vertices at O(sqrt(m)), which is what bounds the wedge
 explosion (and hence shuffle skew) on power-law web graphs; AQE skew-join
-splitting covers the residual tail.
+splitting covers the residual tail. The common-neighbour operators
+(linkpred.py) pair the neighbours of a degree-capped centre (``_wedges``).
 """
 
 from __future__ import annotations
@@ -14,47 +17,49 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _undirected(edges: DataFrame) -> DataFrame:
-    """Distinct undirected simple edges as (a, b) with a < b."""
-    return (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("a"),
-            F.greatest(F.col("src"), F.col("dst")).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+from pagerank_spark.operators.kcore import _broadcaster, _degree, _undirect
 
 
-def _oriented(edges: DataFrame, broadcast_deg: bool | None = None):
-    """(oriented, und, deg): edges oriented low-(degree,id) ->
-    high-(degree,id) as (u, v, dv), the persisted undirected simple edge
-    set, and the vertex degree table (x, d) over it."""
-    und = _undirected(edges).persist()
-    deg_plain = (
-        und.select(F.col("a").alias("x"))
-        .union(und.select(F.col("b").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    # the degree table is vertex-sized; broadcast keeps the edge table in place
-    if broadcast_deg is None:
-        broadcast_deg = deg_plain.count() < 10_000_000
-    deg = F.broadcast(deg_plain) if broadcast_deg else deg_plain
-    e = (
-        und.join(deg.withColumnRenamed("x", "a").withColumnRenamed("d", "da"), "a")
-        .join(deg.withColumnRenamed("x", "b").withColumnRenamed("d", "db"), "b")
-    )
+def _orient(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """The (a, b) edges ``und`` oriented from the lower-(degree, id)
+    endpoint u to the higher v, as (u, v, dv); ``deg`` the (x, d) degree
+    table."""
+    e = und.join(
+        deg.select(F.col("x").alias("a"), F.col("d").alias("da")), "a"
+    ).join(deg.select(F.col("x").alias("b"), F.col("d").alias("db")), "b")
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    out = e.select(
+    return e.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
     )
-    return out, und, deg_plain
+
+
+def _close(o: DataFrame) -> DataFrame:
+    """Each triangle of the oriented edges ``o`` once, as (u, v1, v2): the
+    wedge v1 <- u -> v2 at its lowest-rank vertex u, closed by v1 -> v2."""
+    e1 = o.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
+    e2 = o.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
+    wedges = e1.join(e2, "u").where(
+        (F.col("d1") < F.col("d2"))
+        | ((F.col("d1") == F.col("d2")) & (F.col("v1") < F.col("v2")))
+    )
+    closing = o.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
+    return wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
+
+
+def _wedges(nbrs: DataFrame, max_degree: int) -> DataFrame:
+    """(z, d, a, b) with a < b: every pair of neighbours of a centre z
+    whose degree d is at most ``max_degree``. ``nbrs`` holds (z, v, d)
+    rows, one per neighbour v of z."""
+    c = nbrs.where(F.col("d") <= max_degree)
+    return (
+        c.select("z", "d", F.col("v").alias("a"))
+        .join(c.select("z", F.col("v").alias("b")), "z")
+        .where(F.col("a") < F.col("b"))
+    )
 
 
 def triangle_count(
@@ -66,23 +71,19 @@ def triangle_count(
     (url, degree, triangles), letting clustering_coefficients reuse the
     degree aggregate this function already computes.
 
-    Cache hygiene: intermediates are persisted only for the duration of the
+    The degree table broadcasts under resolve_broadcast's vertex-count
+    policy (``kcore._broadcaster``). Cache hygiene: the undirected edge
+    set and the oriented frame are persisted only for the duration of the
     call — the result is materialized here (tiny global row via collect;
-    per-vertex table via eager localCheckpoint) and the persisted edge sets
-    released before returning, so a session composing many reports never
-    accumulates CacheManager entries (see plans/caching.py)."""
+    per-vertex table via eager localCheckpoint) and both released before
+    returning, so a session composing many reports never accumulates
+    CacheManager entries (see plans/caching.py)."""
     from pagerank_spark.plans.caching import checkpoint_release, collect_release
 
-    oriented, und, deg = _oriented(edges)
-    o = oriented.persist()
-    e1 = o.select(F.col("u"), F.col("v").alias("v1"), F.col("dv").alias("d1"))
-    e2 = o.select(F.col("u"), F.col("v").alias("v2"), F.col("dv").alias("d2"))
-    wedges = e1.join(e2, "u").where(
-        (F.col("d1") < F.col("d2"))
-        | ((F.col("d1") == F.col("d2")) & (F.col("v1") < F.col("v2")))
-    )
-    closing = o.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
+    und = _undirect(edges, "src", "dst")[0].persist()
+    deg = _degree(und)
+    o = _orient(und, _broadcaster(deg.count())(deg)).persist()
+    tris = _close(o)
 
     if not per_vertex:
         out = tris.agg(F.count(F.lit(1)).alias("n_triangles"))

@@ -1,7 +1,11 @@
 """Cache-release helpers for single-result report operators.
 
-The report operators (graph_summary, cocitation, triangle_count, …) persist
-edge-shaped intermediates that several branches of ONE plan share. A plain
+The report operators persist the intermediates that several branches of
+ONE plan share: graph_summary and cocitation their distinct edge table,
+triangle_count the undirected edge set (read by the degree aggregate and
+the orientation) and the oriented edge frame (read three times by the
+triangle closure), adamic_adar and neighbor_jaccard the undirected edge
+set, rich_club it and its degree table. A plain
 ``persist()`` registers with the session CacheManager and is never released
 unless someone calls ``unpersist()`` — but a lazy operator can't unpersist
 before the caller's action or the cache never materializes. In a long-lived

@@ -7,13 +7,13 @@ from __future__ import annotations
 import sys
 
 import duckdb
-import numpy as np
 import pandas as pd
 import pytest
 
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod
+from tools.check_oracles import normalize
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -63,20 +63,10 @@ def duck():
     return con
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object or df[c].dtype == bool:
-            df[c] = df[c].astype(str)
-        elif np.issubdtype(df[c].dtype, np.floating):
-            df[c] = df[c].round(9)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", FAST_QUERIES)
 def test_query_matches_oracle(spark, duck, name):
-    sdf = _normalize(entry_mod.queries()[name](spark, SF_DIR).toPandas())
-    odf = _normalize(duck.execute(entry_mod.oracle_sql()[name]).fetch_df())
+    sdf = normalize(entry_mod.queries()[name](spark, SF_DIR).toPandas())
+    odf = normalize(duck.execute(entry_mod.oracle_sql()[name]).fetch_df())
     assert list(sdf.columns) == list(odf.columns)
     assert len(sdf) == len(odf)
     pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)

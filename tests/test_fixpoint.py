@@ -84,3 +84,29 @@ def test_driver_keeps_the_rounds_the_state_reads(spark):
     assert len(_persistent(sc) - before) == 5
     sums = x.groupBy("k").agg(F.sum("id")).collect()
     assert sorted(sums) == [(k, 6 + 4 * k) for k in range(6)]
+
+
+@pytest.mark.parametrize("op", ["greedy_coloring", "maximal_independent_set"])
+def test_operators_release_their_round_checkpoints(spark, op):
+    # coloring's picks and MIS's winners are checkpointed inside each round;
+    # they, the adjacency and the initial state are released, so what a run
+    # leaves persisted does not grow with its round count
+    import hashlib
+
+    from pagerank_spark.operators.coloring import greedy_coloring
+    from pagerank_spark.operators.mis import maximal_independent_set
+
+    run = {"greedy_coloring": greedy_coloring, "maximal_independent_set": maximal_independent_set}[op]
+    sc = spark.sparkContext
+    left, outs = {}, {}
+    for n in (6, 18):
+        # md5 priorities increase along the path: a round settles one or
+        # two vertices, so the longer path runs about three times the rounds
+        path = sorted((f"q{i:03d}" for i in range(n)),
+                      key=lambda u: hashlib.md5(u.encode()).hexdigest()[:15])
+        edges = spark.createDataFrame(list(zip(path, path[1:])), ["src", "dst"])
+        before = _persistent(sc)
+        outs[n] = run(edges)
+        assert outs[n].count() == (n if op == "greedy_coloring" else n // 2)
+        left[n] = len(_persistent(sc) - before)
+    assert left[18] == left[6], left

@@ -104,3 +104,27 @@ def test_neighbor_jaccard_cap_lower_bounds_common(spark):
     assert row["deg_a"] == 2 and row["deg_b"] == 2
     # jaccard = 1 / (2 + 2 - 1)
     assert row["jaccard"] == pytest.approx(round(1 / 3, 6))
+
+
+def test_bibliographic_coupling_counts_and_indegree_cap(spark):
+    from pagerank_spark.operators.linkpred import bibliographic_coupling
+
+    # the wedge centre is the CITED page: s1 and s2 both cite r1 and r2,
+    # s3 cites r2 only; the duplicate edge and the self-loop collapse
+    rows = [
+        ("s1", "r1"), ("s1", "r2"), ("s1", "r1"), ("s1", "s1"),
+        ("s2", "r1"), ("s2", "r2"),
+        ("s3", "r2"),
+        # r3 is cited by 4 pages: the in-degree cap 3 drops it as a centre
+        ("s1", "r3"), ("s3", "r3"), ("t1", "r3"), ("t2", "r3"),
+    ]
+    got = bibliographic_coupling(_edges(spark, rows), max_cited_indeg=3, min_count=1)
+    assert got.columns == ["a", "b", "couplings"]
+    assert {(r["a"], r["b"]): r["couplings"] for r in got.collect()} == {
+        ("s1", "s2"): 2, ("s1", "s3"): 1, ("s2", "s3"): 1,
+    }
+    # uncapped, r3 couples its four citers too
+    got = bibliographic_coupling(_edges(spark, rows), max_cited_indeg=4, min_count=2)
+    assert {(r["a"], r["b"]): r["couplings"] for r in got.collect()} == {
+        ("s1", "s2"): 2, ("s1", "s3"): 2,
+    }

@@ -307,6 +307,41 @@ def test_fixpoint_round_job_budget(spark, name, run, budget):
     assert (jobs[4] - jobs[2]) / 2 <= budget, jobs
 
 
+def test_triangle_family_job_counts(spark):
+    # clustering_coefficients is one per-vertex triangle_count plus a
+    # projection, so it runs exactly that count's jobs; the per-vertex
+    # count's jobs over the global count's are its union/aggregate/join and
+    # eager checkpoint, not a second triangle enumeration. Figures at the
+    # parent of the shared triangle kernel (local[4], this graph): global
+    # 18, per-vertex 30, clustering 30.
+    from pagerank_spark.operators.graphstats import clustering_coefficients
+    from pagerank_spark.operators.triangles import triangle_count
+
+    sc = spark.sparkContext
+    # a triangulated cylinder of 4-rings and a pendant path: every ring
+    # edge closes a triangle, the path closes none
+    rows = [(f"c{r}{j}", f"c{r}{(j + 1) % 4}") for r in range(6) for j in range(4)]
+    rows += [(f"c{r}{j}", f"c{r + 1}{(j + d) % 4}") for r in range(5) for j in range(4) for d in (0, 1)]
+    rows += [(f"p{i}", f"p{i + 1}") for i in range(5)] + [("c00", "p0")]
+    edges = spark.createDataFrame(rows, ["src", "dst"]).localCheckpoint()
+    runs = {
+        "global": lambda: triangle_count(edges).collect(),
+        "per_vertex": lambda: triangle_count(edges, per_vertex=True).collect(),
+        "clustering": lambda: clustering_coefficients(edges).collect(),
+    }
+    jobs = {}
+    for name, run in runs.items():
+        group = f"triangle-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["clustering"] == jobs["per_vertex"], jobs
+    assert jobs["global"] <= 18, jobs
+
+
 def test_bucketed_edge_table_join_and_agg_are_exchange_free(spark, tmp_path):
     # the co-location contract: a bucketed+sorted edge table joins on its
     # bucket key and aggregates by it without any Exchange — at 100 TB that
